@@ -418,70 +418,71 @@ object SparkEntry {
         rm(new java.io.File(tmp))
       }
     }),
-    // Flight-transport semantics under the gate (reference:
-    // Producer.java:86-510 over gRPC; here the dependency-free framed-TCP
-    // twin, sources/IpcTransport): PUT a table through a real loopback
-    // socket (client→server Arrow IPC ingest), GET it back
-    // (server→client per-partition egress), aggregate the result. The
-    // relay shape of examples/arrow_to_bq.py:1-137 — stream out of the
+    // Flight catalog and job semantics under the gate (reference:
+    // Producer.java:86-510 over gRPC; here sources/FlightGrpc): PUT a
+    // table through a real loopback connection (client→server Arrow
+    // ingest), check the catalog listing, run the table as a ticketed
+    // job, then GET a query result back and aggregate it. The relay
+    // shape of examples/arrow_to_bq.py:1-137 — stream out of the
     // transport into a warehouse-side aggregate — with the BQ sink
     // replaced by the only warehouse in scope (Spark itself).
     "transport_roundtrip" -> ((s, dir) => {
       val orders = TpchGraph.table(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
-      val server = new graft.sources.IpcTransport.Server(s, "gate-token").start()
+      val server = new graft.sources.FlightGrpc.Server(s, "gate-token").start()
       try {
-        val cli = new graft.sources.IpcTransport.Client(
+        val cli = new graft.sources.FlightGrpc.Client(
           "127.0.0.1", server.port, "gate-token")
         try {
-          // r9: the roundtrip now rides the FLIGHT-FRAMED path — every
-          // payload a wire-exact Flight protobuf (FlightData in via FPUT
-          // ≙ acceptPut, FlightData out via FGET ≙ getStream, FlightInfo
-          // via FINFO ≙ getFlightInfo); the plain framed verbs keep spec
-          // coverage in IpcTransportSpec.
-          cli.putFlight("orders_put", orders.repartition(4))
+          cli.doPut("orders_put", orders.repartition(4))
           val finfo = cli.getFlightInfo("orders_put")
           require(finfo.descriptor.path == Seq("orders_put"),
             s"FlightInfo descriptor drift: ${finfo.descriptor}")
           require(finfo.schema.nonEmpty && finfo.endpoints.nonEmpty,
             "FlightInfo missing schema/endpoints")
-          // C4 catalog fidelity (r9, Producer.java:411-437 analog): LIST
-          // carries per-flight schema — register a second table and
-          // require both flights list with their exact schema DDL. A
-          // drift here fails the gate loudly, not just a spec.
+          // C4 catalog fidelity (Producer.java:411-437 analog): every
+          // listed FlightInfo carries its flight's schema — register a
+          // second table and require both flights list with their exact
+          // schema. A drift here fails the gate loudly, not just a spec.
           val nation = TpchGraph.table(s, dir, "nation")
             .select(col("n_nationkey"), col("n_name"))
           server.register("nation_dim", nation)
-          val byName = cli.listFlights().map(f => f._1 -> f._2).toMap
+          val byName = cli.listFlights().map { f =>
+            f.descriptor.path.mkString("/") ->
+              graft.sources.FlightService.sparkSchemaOfStream(
+                graft.sources.FlightProto.splitIpcStream(f.schema)).toDDL
+          }.toMap
           require(byName.keySet == Set("orders_put", "nation_dim"),
             s"LIST catalog mismatch: ${byName.keySet}")
           require(byName("orders_put") == orders.schema.toDDL,
             s"orders_put schema drift: ${byName("orders_put")}")
           require(byName("nation_dim") == nation.schema.toDDL,
             s"nation_dim schema drift: ${byName("nation_dim")}")
-          // C1/C2 through the Flight Action wire (r9b): submit the put
-          // table as a ticketed job via doAction, poll to COMPLETE —
-          // the reference's job.submit/job.status lifecycle
+          // C1/C2 through the Flight Action wire: submit the put table as
+          // a ticketed job via doAction, poll to COMPLETE — the
+          // reference's job.submit/job.status lifecycle
           // (StatusHandler.java:20-47) gated end-to-end.
-          val ticket = cli.doAction("job.submit", "orders_put").asString
+          val ticket =
+            cli.submitJob("job.submit", "orders_put".getBytes("UTF-8"))
           val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          var jst = cli.doAction("job.status", ticket).asString
+          var jst = cli.jobStatus(ticket)
           while (jst != "COMPLETE" && jst != "ERROR" &&
               System.nanoTime() < deadline) {
             Thread.sleep(100)
-            jst = cli.doAction("job.status", ticket).asString
+            jst = cli.jobStatus(ticket)
           }
           require(jst == "COMPLETE", s"ticketed job ended $jst")
-          // r9b: the gate's result now comes through the FULL reference
-          // query lifecycle — a wire-codec CypherMessage body on the
+          // the gate's result comes through the FULL reference query
+          // lifecycle — a wire-codec CypherMessage body on the
           // cypher.read action (u16 length-prefixed framing,
           // CypherMessage.java:84-113), SQL delegation server-side, a
-          // ticketed result flight, streamed back as FlightData frames.
-          val qticket = cli.cypherRead(
+          // ticketed result flight, streamed back by DoGet.
+          val qticket = cli.submitJob("cypher.read",
             graft.sources.ActionMessages.CypherMessage("graft",
               "SELECT o_orderstatus AS status, count(*) AS n, " +
-                "sum(o_custkey) AS sum_cust FROM orders_put GROUP BY 1"))
-          cli.getFlight(s, qticket)
+                "sum(o_custkey) AS sum_cust FROM orders_put GROUP BY 1")
+              .serialize)
+          cli.doGet(s, qticket)
             .localCheckpoint(true) // materialize while the server is up
         } finally cli.close()
       } finally server.close()

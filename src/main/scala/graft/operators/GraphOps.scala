@@ -180,12 +180,4 @@ final case class GraphRef(nodes: DataFrame, rels: DataFrame) {
     if (k == 2) KHop.twoHopEdgesCsr(filtered)
     else KHop.kHopEdges(filtered, k)
   }
-
-  /** §2.3 chunked list output (ARROW_MAX_LIST_SIZE contract,
-    * Config.java:73-75): rows of (ID, START_ID list, END_ID list) with at
-    * most `maxListSize` edges per row — through the custom ChunkedCollect
-    * physical operator (one exchange + streaming emit; the declarative
-    * `KHop.chunk` remains as a cross-check). */
-  def khopChunked(types: Seq[String] = Nil, maxListSize: Int = 2048): DataFrame =
-    KHop.chunkNative(khop(types), maxListSize)
 }

@@ -735,16 +735,15 @@ object Similarity {
       .select(col("vec_id").as("aid"), col("qv").as("av"))
     val b = q.where(!col("is_a"))
       .select(col("vec_id").as("bid"), col("qv").as("bv"))
-    // r12 opt (guide §5 re-evaluation): dots has THREE consumers (both
-    // kNN sums + the scored join) and scored three more (both argmaxes +
-    // the final mutual join) — un-materialized, the |A|×|B| broadcast
-    // cross was recomputed per consumer. One eager checkpoint each runs
-    // it once; the cross product is the operator's inherent intermediate
-    // (compose with IVF cell restriction when |A|·|B| outgrows it).
+    // dots and scored stay LAZY: each consumer (both kNN sums, the
+    // scored join, both argmaxes, the mutual join) re-derives the
+    // broadcast cross dot instead of pinning an |A|×|B| table in block
+    // storage — recompute is the price of keeping the operator's scale
+    // shape (no materialized |A|×|B| intermediate) and one plan the
+    // optimizer sees whole.
     val dots = a.join(broadcast(b), lit(true))
       .select(col("aid"), col("bid"),
         longDot(col("av"), col("bv")).as("dot"))
-      .localCheckpoint(true)
     val ska = TopK.perKey(dots, key = "aid", ord = "dot",
         tiebreak = "bid", payload = "bid", k = k)
       .groupBy(col("aid")).agg(sum(col("dot")).cast("long").as("ska"))
@@ -754,7 +753,6 @@ object Similarity {
     val scored = dots.join(ska, "aid").join(skb, "bid")
       .select(col("aid"), col("bid"),
         (lit(2L * k) * col("dot") - col("ska") - col("skb")).as("csls"))
-      .localCheckpoint(true)
     val bestA = TopK.perKey(scored, key = "aid", ord = "csls",
         tiebreak = "bid", payload = "bid", k = 1)
       .select(col("aid"), col("bid"))

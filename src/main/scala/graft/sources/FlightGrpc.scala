@@ -41,9 +41,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * HPACK header compression, stream multiplexing, flow-control windows,
   * frame splitting at max-frame-size — come from Netty's vetted codec
   * (`Http2FrameCodec` + `Http2MultiplexHandler`), exactly the layering
-  * grpc-java itself uses (grpc-netty). The verbs run on the SAME
-  * [[FlightService]] instance as the framed-TCP transport, so both wires
-  * front one catalog/job registry.
+  * grpc-java itself uses (grpc-netty). The verbs themselves live in
+  * [[FlightService]]; several servers may front one service instance
+  * (one catalog/job registry) through `sharedService`.
   *
   * Methods served (Flight.proto service surface): Handshake, ListFlights,
   * GetFlightInfo, GetSchema, DoGet, DoPut, DoExchange, DoAction,
@@ -937,9 +937,9 @@ object FlightGrpc {
           // ticket-producing actions answer with a serialized Ticket
           // PROTOBUF in Result.body — the reference contract its client
           // depends on (neo4j_arrow.py:157-168 `_submit` runs
-          // Ticket.deserialize on the body). The framed-TCP transport
-          // keeps its raw-string contract; this wrapping is the gRPC
-          // wire's fidelity layer.
+          // Ticket.deserialize on the body). FlightService answers with
+          // the raw ticket string; this wrapping is the wire's fidelity
+          // layer.
           if (TicketActions(action.atype.toLowerCase))
             write(FlightProto.ActionResult(
               FlightProto.Ticket(res.body).encode).encode)

@@ -27,10 +27,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *  - `FlightData { flight_descriptor=1, data_header=2 (bytes: the
   *    flatbuffer Message), app_metadata=3 (bytes), data_body=1000 (bytes) }`
   *
-  * With these frames riding [[IpcTransport]]'s length-prefixed socket, the
-  * one delta left to a real `arrow-flight` client is the HTTP/2/gRPC
-  * session layer itself (documented in COVERAGE.md §2.6) — every byte of
-  * the Flight payloads is already wire-exact.
+  * [[FlightGrpc]] carries these messages as gRPC length-prefixed frames
+  * over HTTP/2 — the session layer a stock `arrow-flight` client speaks.
   */
 object FlightProto {
 
@@ -416,15 +414,5 @@ object FlightProto {
     }
     if (cur.nonEmpty) blobs += joinIpcStream(cur.reverse)
     blobs.result()
-  }
-
-  /** The IPC-encapsulated Schema bytes FlightInfo.schema carries (the
-    * reference resolves this per ticket, Producer.java:411-437): the
-    * first message of any of the table's partition streams, re-framed. */
-  def encapsulatedSchema(firstStream: Array[Byte]): Array[Byte] = {
-    val first = splitIpcStream(firstStream).headOption
-      .getOrElse(throw new IllegalArgumentException("empty IPC stream"))
-    require(isSchemaMessage(first), "stream does not start with a Schema")
-    joinIpcStream(Seq(first)).dropRight(8) // no EOS inside FlightInfo.schema
   }
 }

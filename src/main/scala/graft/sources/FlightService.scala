@@ -9,16 +9,14 @@ import org.apache.spark.sql.functions.{array, col}
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The Flight SERVICE itself — catalog, ingest, ticketed jobs, actions —
-  * factored out of the transport so the same semantics ride BOTH wire
-  * layers: the dependency-free framed-TCP protocol ([[IpcTransport]]) and
-  * the real gRPC-over-HTTP/2 session layer ([[FlightGrpc]]). This mirrors
-  * the reference's own layering: Producer.java:86-510 implements the verbs
+  * factored out of the wire layer ([[FlightGrpc]]). This mirrors the
+  * reference's own layering: Producer.java:86-510 implements the verbs
   * once and arrow-flight's gRPC bindings carry them; here the verbs live
-  * in one class and two transports carry them.
+  * in one class and the gRPC/HTTP/2 session layer carries them (one
+  * service instance may front several [[FlightGrpc.Server]] endpoints).
   *
   * Every method either returns a value or THROWS with a message — the
-  * transports translate failures into their own error frames (an `ERR`
-  * control line, or a non-zero `grpc-status` trailer).
+  * transport translates failures into a non-zero `grpc-status` trailer.
   */
 final class FlightService(val spark: SparkSession) {
   private val tables = TrieMap.empty[String, DataFrame]
@@ -68,8 +66,6 @@ final class FlightService(val spark: SparkSession) {
     graphCatalog.register(name, nodes, rels); ()
   }
 
-  def table(name: String): Option[DataFrame] = tables.get(name)
-
   def require(name: String): DataFrame =
     tables.getOrElse(name,
       throw new NoSuchElementException(s"not found: $name"))
@@ -118,9 +114,6 @@ final class FlightService(val spark: SparkSession) {
         FlightProto.Ticket.of(name),
         Seq(FlightProto.Location(locationUri)))),
       totalRecords = -1L, totalBytes = -1L)
-
-  private def groupStreams(msgs: Seq[FlightProto.IpcMessage]): Seq[Array[Byte]] =
-    FlightProto.groupStreams(msgs)
 
   // -------------------------- per-partition endpoints (parallel readers)
   // Flight's scale model: GetFlightInfo returns one endpoint PER
@@ -301,10 +294,7 @@ final class FlightService(val spark: SparkSession) {
       appendSchemaDdl.get(name).foreach(d =>
         Predef.require(d == schema.toDDL,
           s"append schema drift for $name: ${schema.toDDL} != $d"))
-      import spark.implicits._
-      val df = ArrowIpc.fromIpcStreams(
-          spark.createDataset(FlightProto.groupStreams(msgs)), schema)
-        .localCheckpoint(true)
+      val df = materialize(msgs)
       val dir = java.nio.file.Files
         .createTempDirectory("graft_flight_append_").toFile
       stagedDirs.add(dir)
@@ -333,7 +323,8 @@ final class FlightService(val spark: SparkSession) {
       log(seq).indices.map(i => s"$name@$seq#$i"))
   }
 
-  /** Delete staged partition files (transports call this on close). */
+  /** Delete staged partition files ([[FlightGrpc.Server]] calls this on
+    * close). */
   def cleanupStaging(): Unit = {
     staged.clear()
     appendLog.clear()
@@ -357,35 +348,6 @@ final class FlightService(val spark: SparkSession) {
       case fd if fd.dataHeader.nonEmpty =>
         FlightProto.IpcMessage(fd.dataHeader, fd.dataBody)
     }
-
-  /** acceptPut with the schema taken from the wire itself. */
-  def ingestFlightData(name: String,
-                       msgs: Seq[FlightProto.IpcMessage]): Long =
-    ingestFlightData(name,
-      FlightService.sparkSchemaOfStream(msgs).toDDL, msgs)
-
-  /** DoExchange with the schema taken from the wire itself. */
-  def exchange(frames: Seq[FlightProto.FlightData]): DataFrame =
-    exchange(FlightService.sparkSchemaOfStream(ipcMessages(frames)).toDDL,
-      frames)
-
-  /** Graph-part put with the schema taken from the wire itself. */
-  def putGraphPart(frames: Seq[FlightProto.FlightData]): Long =
-    putGraphPart(FlightService.sparkSchemaOfStream(ipcMessages(frames)).toDDL,
-      frames)
-
-  /** Ingest raw per-partition IPC stream blobs as flight `name`.
-    * Materializes NOW: ingest must fail on this request (bad schema,
-    * ragged batch), not on a later reader's action. Returns row count. */
-  def ingestBlobs(name: String, ddl: String,
-                  blobs: Seq[Array[Byte]]): Long = {
-    val schema = StructType.fromDDL(ddl)
-    import spark.implicits._
-    val df = ArrowIpc.fromIpcStreams(spark.createDataset(blobs), schema)
-      .localCheckpoint(true)
-    register(name, df) // invalidates any staging of the PREVIOUS upload
-    df.count()
-  }
 
   /** acceptPut of a LARGE upload the transport spilled to disk: `dir`
     * holds the decoded per-stream `.arrows` files (exactly the framing
@@ -430,15 +392,23 @@ final class FlightService(val spark: SparkSession) {
     }
   }
 
-  /** acceptPut: a FlightData message stream (Schema headers delimit the
-    * per-partition IPC streams) ingests as flight `name`. */
-  def ingestFlightData(name: String, ddl: String,
-                       msgs: Seq[FlightProto.IpcMessage]): Long = {
-    val schema = StructType.fromDDL(ddl)
+  /** The rows of a FlightData message stream, schema from its leading
+    * Schema message (Schema headers delimit the per-partition IPC
+    * streams). Materializes NOW: ingest must fail on this request (bad
+    * schema, ragged batch), not on a later reader's action. */
+  private def materialize(msgs: Seq[FlightProto.IpcMessage]): DataFrame = {
+    val schema = FlightService.sparkSchemaOfStream(msgs)
     import spark.implicits._
-    val df = ArrowIpc.fromIpcStreams(
-        spark.createDataset(groupStreams(msgs)), schema)
+    ArrowIpc.fromIpcStreams(
+        spark.createDataset(FlightProto.groupStreams(msgs)), schema)
       .localCheckpoint(true)
+  }
+
+  /** acceptPut: a FlightData message stream ingests as flight `name`;
+    * returns the row count. */
+  def ingestFlightData(name: String,
+                       msgs: Seq[FlightProto.IpcMessage]): Long = {
+    val df = materialize(msgs)
     register(name, df) // invalidates any staging of the PREVIOUS upload
     df.count()
   }
@@ -449,21 +419,14 @@ final class FlightService(val spark: SparkSession) {
     * descriptor's wire-codec CypherMessage runs over them, the result
     * streams back in the same call — transform-in-flight, no named
     * flight ever registered. */
-  def exchange(ddl: String,
-               frames: Seq[FlightProto.FlightData]): DataFrame = {
+  def exchange(frames: Seq[FlightProto.FlightData]): DataFrame = {
     val desc = frames.headOption.flatMap(_.descriptor)
       .getOrElse(throw new IllegalArgumentException(
         "first FlightData must carry a CMD descriptor"))
     Predef.require(desc.dtype == FlightProto.DescriptorType.Cmd,
       "descriptor must be CMD (a serialized CypherMessage)")
     val msg = ActionMessages.CypherMessage.deserialize(desc.cmd)
-    val msgs = ipcMessages(frames)
-    val schema = StructType.fromDDL(ddl)
-    import spark.implicits._
-    val inputDf = ArrowIpc.fromIpcStreams(
-        spark.createDataset(groupStreams(msgs)), schema)
-      .localCheckpoint(true)
-    inputDf.createOrReplaceTempView("input")
+    materialize(ipcMessages(frames)).createOrReplaceTempView("input")
     spark.sql(msg.cypher).localCheckpoint(true)
   }
 
@@ -474,19 +437,13 @@ final class FlightService(val spark: SparkSession) {
     * by its own key vocabulary (source_field ⇒ rels). Field names from
     * the message rename to the canonical columns, and the graph
     * registers once both halves have arrived. Returns row count. */
-  def putGraphPart(ddl: String,
-                   frames: Seq[FlightProto.FlightData]): Long = {
+  def putGraphPart(frames: Seq[FlightProto.FlightData]): Long = {
     val desc = frames.headOption.flatMap(_.descriptor)
       .getOrElse(throw new IllegalArgumentException(
         "first FlightData must carry a descriptor"))
     Predef.require(desc.dtype == FlightProto.DescriptorType.Cmd,
       "descriptor must be CMD (a serialized write message)")
-    val msgs = ipcMessages(frames)
-    val schema = StructType.fromDDL(ddl)
-    import spark.implicits._
-    val df = ArrowIpc.fromIpcStreams(
-        spark.createDataset(groupStreams(msgs)), schema)
-      .localCheckpoint(true)
+    val df = materialize(ipcMessages(frames))
     // the CMD is either the write message itself or a serialized Ticket
     // from a prior gds.write.* action (the reference client's flow)
     val cmdBytes = resolveWriteCmd(desc.cmd)
@@ -537,8 +494,9 @@ final class FlightService(val spark: SparkSession) {
     FlightProto.ActionType("gds.write.relationships",
       "Ticket a graph rel-write; stream the rows via DoPut on the ticket"))
 
-  /** Action bodies arrive in two encodings: our transports send the raw
-    * ticket string; the reference's client sends a serialized Ticket
+  /** Action bodies arrive in two encodings: [[FlightGrpc.Client]]'s
+    * `doAction` sends the raw ticket string; the reference's client and
+    * [[FlightGrpc.Client]]'s `jobStatus` send a serialized Ticket
     * PROTOBUF (neo4j_arrow.py:287-294 `status` passes
     * `ticket.serialize()`). Sniff: a proto Ticket decodes to field 1
     * bytes; raw strings fail the proto walk (or yield no field-1
@@ -667,8 +625,9 @@ final class FlightService(val spark: SparkSession) {
   }
 
   /** A gds.write DoPut's CMD payload is either the write message itself
-    * (our transports) or a serialized Ticket from a prior gds.write.*
-    * action (the reference's flow) — resolve to the message bytes. */
+    * ([[FlightGrpc.Client]]'s `doPutGraphPart`) or a serialized Ticket
+    * from a prior gds.write.* action (the reference's flow) — resolve to
+    * the message bytes. */
   private[sources] def resolveWriteCmd(cmd: Array[Byte]): Array[Byte] = {
     val asTicket =
       try {
@@ -685,22 +644,6 @@ final class FlightService(val spark: SparkSession) {
       } catch { case scala.util.control.NonFatal(_) => None }
     asTicket.getOrElse(cmd)
   }
-
-  /** Run a registered flight as a ticketed job; returns the ticket. */
-  def submit(name: String): String = {
-    val df = require(name)
-    import scala.concurrent.ExecutionContext.Implicits.global
-    graft.operators.Jobs.submit(df).ticket
-  }
-
-  /** The Status as rendered by Scala (`Pending`/`Producing`/`Complete`/
-    * `Cancelled`/`Error(…)`) — the gRPC job.status action uppercases it
-    * at its own layer; throws for an unknown ticket. */
-  def status(ticket: String): String =
-    graft.operators.Jobs.status(ticket) match {
-      case Some(st) => st.toString
-      case None => throw new NoSuchElementException("unknown ticket")
-    }
 
   /** Cancel a job (the reference's Job.cancel(true), Producer.java:
     * 133-136): CANCELLED if this call stopped it, ALREADY_DONE if the
@@ -726,9 +669,7 @@ object FlightService {
   }
   /** Spark schema decoded from a stream's LEADING Arrow Schema message —
     * how a real Flight stream carries its schema (no side-channel DDL;
-    * the gRPC transport uses this on both ends, while the framed-TCP
-    * protocol keeps its explicit-DDL contract for forensic symmetry with
-    * INFO). */
+    * the gRPC server and client both use it). */
   def sparkSchemaOfStream(
       msgs: Seq[FlightProto.IpcMessage]): StructType = {
     val first = msgs.headOption.getOrElse(

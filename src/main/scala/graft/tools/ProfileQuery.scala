@@ -28,11 +28,16 @@ object ProfileQuery {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
     // r12: ad-hoc A/B experiments (e.g. streaming state-store provider)
-    // without touching gate code — semicolon-separated k=v pairs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
+    // without touching gate code — semicolon-separated k=v pairs; empty
+    // segments (a trailing `;`) are skipped
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
+      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) => builder.config(k, v)
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_EXTRA_CONF segment '$kv' is not key=value")
+        }
+      })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -6,7 +6,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ActionMessages, IpcTransport}
+import graft.FlightFixture.withFlight
+import graft.sources.{ActionMessages, FlightGrpc}
 import graft.sources.ActionMessages.{CypherMessage, GdsMessage}
 
 /** The reference's job-request message codecs on the wire, plus the
@@ -100,112 +101,102 @@ class ActionMessagesSpec extends AnyFunSuite {
   test("gds.write over the wire: CMD-descriptor FlightData streams build " +
       "a graph queryable by gds.read") {
     import graft.sources.ActionMessages.{GdsWriteNodeMessage, GdsWriteRelsMessage}
-    val srv = new IpcTransport.Server(spark, token = "sekrit").start()
-    try {
-      val c = new IpcTransport.Client("127.0.0.1", srv.port, "sekrit")
-      try {
-        // client-side tables with NON-canonical field names + scalar label
-        val nodes = (0L until 40L)
-          .map(i => (i, if (i % 2 == 0) "Even" else "Odd", i * 1.5))
-          .toDF("node_id", "lab", "score")
-        val rels = (0L until 39L).map(i => (i, i + 1, "NEXT"))
-          .toDF("s", "t", "ty")
-        assert(c.putGraphNodes(GdsWriteNodeMessage(db = "graft",
-          graph = "wg", idField = "node_id", labelsField = "lab"),
-          nodes.repartition(2)) == 40L)
-        // graph not complete yet: gds.read must fail NOT_FOUND
-        val e = intercept[IllegalArgumentException](
-          c.gdsRead(ActionMessages.GdsMessage(db = "graft", graph = "wg",
-            requestType = "node")))
-        assert(e.getMessage.contains("not found"))
-        assert(c.putGraphRels(GdsWriteRelsMessage(db = "graft",
-          graph = "wg", sourceField = "s", targetField = "t",
-          typeField = "ty"), rels.repartition(2)) == 39L)
-        // both halves arrived: the graph serves reads with canonical
-        // columns and the scalar label canonicalized to a label set
-        val nt = c.gdsRead(ActionMessages.GdsMessage(db = "graft",
-          graph = "wg", requestType = "node", filters = Seq("Even")))
-        val gotN = c.getFlight(spark, nt)
-        assert(gotN.count() == 20L)
-        assert(gotN.columns.take(2).toSeq == Seq("ID", "LABELS"))
-        val kt = c.gdsRead(ActionMessages.GdsMessage(db = "graft",
-          graph = "wg", requestType = "khop", filters = Seq("NEXT")))
-        // 2-hop on the 40-node path graph: interior origins see 4 edges
-        val gotK = c.getFlight(spark, kt)
-        val perOrigin = gotK.groupBy($"origin").count()
-          .as[(Long, Long)].collect().toMap
-        assert(perOrigin(20L) == 4L && perOrigin(0L) == 2L)
-      } finally c.close()
-    } finally srv.close()
+    withFlight { (_, c) =>
+      // client-side tables with NON-canonical field names + scalar label
+      val nodes = (0L until 40L)
+        .map(i => (i, if (i % 2 == 0) "Even" else "Odd", i * 1.5))
+        .toDF("node_id", "lab", "score")
+      val rels = (0L until 39L).map(i => (i, i + 1, "NEXT"))
+        .toDF("s", "t", "ty")
+      // DoPut with a CMD descriptor carrying the write message itself
+      assert(c.doPutGraphPart(GdsWriteNodeMessage(db = "graft",
+        graph = "wg", idField = "node_id", labelsField = "lab").serialize,
+        nodes.repartition(2)) == 40L)
+      // graph not complete yet: gds.read must fail NOT_FOUND
+      val e = intercept[FlightGrpc.GrpcException](
+        c.submitJob("gds.read", GdsMessage(db = "graft", graph = "wg",
+          requestType = "node").serialize))
+      assert(e.code == FlightGrpc.Status.NotFound)
+      assert(e.getMessage.contains("not found"))
+      assert(c.doPutGraphPart(GdsWriteRelsMessage(db = "graft",
+        graph = "wg", sourceField = "s", targetField = "t",
+        typeField = "ty").serialize, rels.repartition(2)) == 39L)
+      // both halves arrived: the graph serves reads with canonical
+      // columns and the scalar label canonicalized to a label set
+      val nt = c.submitJob("gds.read", GdsMessage(db = "graft",
+        graph = "wg", requestType = "node", filters = Seq("Even")).serialize)
+      val gotN = c.doGet(spark, nt)
+      assert(gotN.count() == 20L)
+      assert(gotN.columns.take(2).toSeq == Seq("ID", "LABELS"))
+      val kt = c.submitJob("gds.read", GdsMessage(db = "graft",
+        graph = "wg", requestType = "khop", filters = Seq("NEXT")).serialize)
+      // 2-hop on the 40-node path graph: interior origins see 4 edges
+      val gotK = c.doGet(spark, kt)
+      val perOrigin = gotK.groupBy($"origin").count()
+        .as[(Long, Long)].collect().toMap
+      assert(perOrigin(20L) == 4L && perOrigin(0L) == 2L)
+    }
   }
 
+  // FXCHG is DoExchange's short label
   test("FXCHG (DoExchange): upload + query + result stream in ONE call, " +
       "nothing registered server-side") {
-    val srv = new IpcTransport.Server(spark, token = "sekrit").start()
-    try {
-      val c = new IpcTransport.Client("127.0.0.1", srv.port, "sekrit")
-      try {
-        val df = (0L until 300L).map(i => (i, s"g${i % 4}", i * 1.5))
-          .toDF("id", "grp", "v")
-        val got = c.exchange(spark,
-            CypherMessage("graft",
-              "SELECT grp, count(*) AS n, sum(v) AS sv FROM input " +
-                "GROUP BY grp"),
-            df.repartition(3))
-          .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
-        val want = df.groupBy($"grp")
-          .agg(count(lit(1)).as("n"), sum($"v").as("sv"))
-          .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
-        assert(got == want)
-        // the exchange left no flight behind
-        assert(!c.listTables().exists(_ != "input") || c.listTables().isEmpty)
-        assert(c.listTables().isEmpty)
-        // a bad query fails the exchange call itself
-        val e = intercept[IllegalArgumentException](
-          c.exchange(spark, CypherMessage("graft", "SELECT nope FROM input"),
-            df.limit(5)))
-        assert(e.getMessage.contains("ERR"))
-        // and the connection survives for the next verb
-        assert(c.doAction("info.version").asString.nonEmpty)
-      } finally c.close()
-    } finally srv.close()
+    withFlight { (_, c) =>
+      val df = (0L until 300L).map(i => (i, s"g${i % 4}", i * 1.5))
+        .toDF("id", "grp", "v")
+      val got = c.doExchange(spark,
+          CypherMessage("graft",
+            "SELECT grp, count(*) AS n, sum(v) AS sv FROM input " +
+              "GROUP BY grp"),
+          df.repartition(3))
+        .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
+      val want = df.groupBy($"grp")
+        .agg(count(lit(1)).as("n"), sum($"v").as("sv"))
+        .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
+      assert(got == want)
+      // the exchange left no flight behind
+      assert(c.listFlights().isEmpty)
+      // a bad query fails the exchange call itself
+      val e = intercept[FlightGrpc.GrpcException](
+        c.doExchange(spark, CypherMessage("graft", "SELECT nope FROM input"),
+          df.limit(5)))
+      assert(e.code != FlightGrpc.Status.Ok && e.getMessage.contains("nope"))
+      // and the connection survives for the next verb
+      assert(c.doAction("info.version", "").asString.nonEmpty)
+    }
   }
 
+  // FGET is DoGet's short label
   test("cypher.read over the wire: CypherMessage body -> ticket -> " +
       "FGET streams the query result") {
-    val srv = new IpcTransport.Server(spark, token = "sekrit").start()
-    try {
-      val c = new IpcTransport.Client("127.0.0.1", srv.port, "sekrit")
-      try {
-        val df = (0L until 200L).map(i => (i, s"g${i % 3}", i * 2.5))
-          .toDF("id", "grp", "v")
-        c.putFlight("t200", df.repartition(2))
-        val ticket = c.cypherRead(CypherMessage("graft",
-          "SELECT grp, count(*) AS n, sum(v) AS sv FROM t200 GROUP BY grp"))
-        assert(ticket.nonEmpty)
-        // the ticketed result is a flight: FGET it back
-        val got = c.getFlight(spark, ticket)
-          .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
-        val want = df.groupBy($"grp").agg(count(lit(1)).as("n"),
-            sum($"v").as("sv"))
-          .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
-        assert(got == want)
-        // and the job lifecycle applies to it (ticket is pollable)
-        val st = c.doAction("job.status", ticket).asString
-        assert(Set("PENDING", "PRODUCING", "COMPLETE")(st))
-        // a broken query fails the ACTION, not a later stream read
-        val e = intercept[IllegalArgumentException](
-          c.cypherRead(CypherMessage("graft", "SELECT no_such FROM t200")))
-        assert(e.getMessage.contains("ERR") &&
-          e.getMessage.contains("no_such"))
-      } finally c.close()
-    } finally srv.close()
+    withFlight { (_, c) =>
+      val df = (0L until 200L).map(i => (i, s"g${i % 3}", i * 2.5))
+        .toDF("id", "grp", "v")
+      c.doPut("t200", df.repartition(2))
+      val ticket = c.submitJob("cypher.read", CypherMessage("graft",
+        "SELECT grp, count(*) AS n, sum(v) AS sv FROM t200 GROUP BY grp")
+        .serialize)
+      assert(ticket.nonEmpty)
+      // the ticketed result is a flight: DoGet it back
+      val got = c.doGet(spark, ticket)
+        .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
+      val want = df.groupBy($"grp").agg(count(lit(1)).as("n"),
+          sum($"v").as("sv"))
+        .as[(String, Long, Double)].collect().sortBy(_._1).toSeq
+      assert(got == want)
+      // and the job lifecycle applies to it (ticket is pollable)
+      assert(Set("PENDING", "PRODUCING", "COMPLETE")(c.jobStatus(ticket)))
+      // a broken query fails the ACTION, not a later stream read
+      val e = intercept[FlightGrpc.GrpcException](
+        c.submitJob("cypher.read",
+          CypherMessage("graft", "SELECT no_such FROM t200").serialize))
+      assert(e.getMessage.contains("no_such"))
+    }
   }
 
   test("gds.read over the wire: GdsMessage node/relationship requests " +
       "against a registered graph match the GraphRef scans") {
-    val srv = new IpcTransport.Server(spark, token = "sekrit").start()
-    try {
+    withFlight { (srv, c) =>
       val nodes = (0L until 60L).map(i =>
           (i, Seq(if (i % 2 == 0) "Even" else "Odd"), s"n$i", i * 1.5))
         .toDF("ID", "LABELS", "name", "score")
@@ -213,28 +204,25 @@ class ActionMessagesSpec extends AnyFunSuite {
         .toDF("START_ID", "END_ID", "TYPE", "weight")
       srv.registerGraph("g", nodes, rels)
       val ref = graft.operators.GraphRef(nodes, rels)
-      val c = new IpcTransport.Client("127.0.0.1", srv.port, "sekrit")
-      try {
-        val nt = c.gdsRead(GdsMessage(db = "graft", graph = "g",
-          requestType = "node", properties = Seq("name"),
-          filters = Seq("Even")))
-        val gotN = c.getFlight(spark, nt)
-        val wantN = ref.nodeScan(props = Seq("name"), labels = Seq("Even"))
-        assert(gotN.count() == 30L)
-        assert(gotN.select($"ID", $"name").as[(Long, String)].collect().toSet
-          == wantN.select($"ID", $"name").as[(Long, String)].collect().toSet)
-        val rt = c.gdsRead(GdsMessage(db = "graft", graph = "g",
-          requestType = "relationship", properties = Seq("weight"),
-          filters = Seq("NEXT")))
-        val gotR = c.getFlight(spark, rt)
-        val wantR = ref.relScan(props = Seq("weight"), types = Seq("NEXT"))
-        assert(gotR.count() == wantR.count())
-        // unknown graph fails the action with NOT_FOUND semantics
-        val e = intercept[IllegalArgumentException](
-          c.gdsRead(GdsMessage(db = "graft", graph = "nope",
-            requestType = "node")))
-        assert(e.getMessage.contains("not found"))
-      } finally c.close()
-    } finally srv.close()
+      val nt = c.submitJob("gds.read", GdsMessage(db = "graft", graph = "g",
+        requestType = "node", properties = Seq("name"),
+        filters = Seq("Even")).serialize)
+      val gotN = c.doGet(spark, nt)
+      val wantN = ref.nodeScan(props = Seq("name"), labels = Seq("Even"))
+      assert(gotN.count() == 30L)
+      assert(gotN.select($"ID", $"name").as[(Long, String)].collect().toSet
+        == wantN.select($"ID", $"name").as[(Long, String)].collect().toSet)
+      val rt = c.submitJob("gds.read", GdsMessage(db = "graft", graph = "g",
+        requestType = "relationship", properties = Seq("weight"),
+        filters = Seq("NEXT")).serialize)
+      val gotR = c.doGet(spark, rt)
+      val wantR = ref.relScan(props = Seq("weight"), types = Seq("NEXT"))
+      assert(gotR.count() == wantR.count())
+      // unknown graph fails the action with NOT_FOUND
+      val e = intercept[FlightGrpc.GrpcException](
+        c.submitJob("gds.read", GdsMessage(db = "graft", graph = "nope",
+          requestType = "node").serialize))
+      assert(e.code == FlightGrpc.Status.NotFound)
+    }
   }
 }

@@ -11,9 +11,8 @@ import graft.sources.{ActionMessages, FlightGrpc, FlightProto}
   * (sources/FlightGrpc): every RPC rides Netty's HTTP/2 codec on the
   * loopback — connection preface, SETTINGS, HPACK, stream multiplexing
   * and flow-control windows are all the genuine article, with gRPC's
-  * length-prefixed message framing and grpc-status trailers on top.
-  * This closes the layer the framed-TCP transport (IpcTransportSpec)
-  * stubbed: what a grpc-java Flight client speaks on the wire. */
+  * length-prefixed message framing and grpc-status trailers on top:
+  * what a grpc-java Flight client speaks on the wire. */
 class FlightGrpcSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -151,6 +150,11 @@ class FlightGrpcSpec extends AnyFunSuite {
         // job.cancel on a terminal job loses the race, non-destructively
         assert(c.doAction("job.cancel", ticket).asString == "ALREADY_DONE")
         assert(c.doAction("job.status", ticket).asString == "COMPLETE")
+        // cancelling a ticket no job owns is NOT_FOUND
+        val e = intercept[FlightGrpc.GrpcException](
+          c.doAction("job.cancel", "no-such"))
+        assert(e.code == FlightGrpc.Status.NotFound &&
+          e.getMessage.contains("unknown ticket"))
       }
     }
   }
@@ -301,21 +305,42 @@ class FlightGrpcSpec extends AnyFunSuite {
     }
   }
 
-  test("the gRPC transport and the framed-TCP transport can front ONE " +
-      "shared service: put via gRPC, read via framed TCP") {
-    val tcp = new graft.sources.IpcTransport.Server(spark, "sekrit").start()
-    val grpc = new FlightGrpc.Server(spark, "sekrit",
-      sharedService = Some(tcp.service)).start()
-    try {
-      withClient(grpc) { gc =>
-        assert(gc.doPut("shared_t", sample) == 500L)
-        val tc = new graft.sources.IpcTransport.Client(
-          "127.0.0.1", tcp.port, "sekrit")
-        try {
-          assert(tc.listTables() == Seq("shared_t"))
-          assert(tc.get(spark, "shared_t").count() == 500L)
-        } finally tc.close()
+  test("two client connections are served at once") {
+    withServer { srv =>
+      srv.register("people", sample)
+      withClient(srv) { c1 =>
+        withClient(srv) { c2 =>
+          assert(c1.listFlights().map(_.descriptor.path) == Seq(Seq("people")))
+          assert(c2.getFlightInfo("people").endpoints.nonEmpty)
+          // both connections hold a DoGet open at the same time
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+          try {
+            val fs = Seq(c1, c2).map(c => pool.submit(
+              new java.util.concurrent.Callable[Long] {
+                def call(): Long = c.doGet(spark, "people").count()
+              }))
+            fs.foreach(f =>
+              assert(f.get(120, java.util.concurrent.TimeUnit.SECONDS) == 500L))
+          } finally pool.shutdownNow()
+        }
       }
-    } finally { grpc.close(); tcp.close() }
+    }
+  }
+
+  test("two gRPC endpoints can front ONE shared service: put via one, " +
+      "read via the other") {
+    val a = new FlightGrpc.Server(spark, "sekrit").start()
+    val b = new FlightGrpc.Server(spark, "sekrit",
+      sharedService = Some(a.service)).start()
+    try {
+      withClient(a) { ca =>
+        assert(ca.doPut("shared_t", sample) == 500L)
+        withClient(b) { cb =>
+          assert(cb.listFlights().map(_.descriptor.path) ==
+            Seq(Seq("shared_t")))
+          assert(cb.doGet(spark, "shared_t").count() == 500L)
+        }
+      }
+    } finally { b.close(); a.close() }
   }
 }

@@ -6,7 +6,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ArrowIpc, FlightProto, IpcTransport}
+import graft.FlightFixture.withFlight
+import graft.sources.{ArrowIpc, FlightGrpc, FlightProto}
 
 /** Wire-exactness of the hand-rolled Arrow Flight protobuf layer.
   *
@@ -131,82 +132,83 @@ class FlightProtoSpec extends AnyFunSuite {
       sample.as[(Long, String, Double)].collect().sorted.toSeq)
   }
 
+  // FACTIONS/FACTION are ListActions/DoAction's short labels
   test("FACTIONS/FACTION carry Flight Action/ActionType/Result protos " +
       "for the reference's doAction vocabulary") {
-    val srv = new IpcTransport.Server(spark, token = "sekrit").start()
-    try {
-      val c = new IpcTransport.Client("127.0.0.1", srv.port, "sekrit")
-      try {
-        // listActions: the reference's action vocabulary (job.status =
-        // StatusHandler, info.jobs/info.version = ServerInfoHandler)
-        val actions = c.listActions()
-        assert(actions.map(_.atype).toSet ==
-          Set("cypher.read", "gds.read", "job.status", "job.cancel",
-            "job.submit", "info.jobs", "info.version", "flight.log",
-            "flight.log.schema", "flight.log.tickets", "gds.write.nodes",
-            "gds.write.relationships"))
-        actions.foreach { a =>
-          val fs = parse(a.encode) // ActionType fields 1/2 per Flight.proto
-          assert(new String(b1(fs, 1), UTF_8) == a.atype)
-          assert(new String(b1(fs, 2), UTF_8) == a.description)
-        }
-        assert(c.doAction("info.version").asString.nonEmpty)
-        assert(c.doAction("INFO.VERSION").asString ==
-          c.doAction("info.version").asString) // case-insensitive dispatch
-        // ticketed job through the Action path end-to-end
-        c.putFlight("tact", sample.coalesce(2))
-        val ticket = c.doAction("job.submit", "tact").asString
-        assert(ticket.nonEmpty)
-        var st = c.doAction("job.status", ticket).asString
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (st != "COMPLETE" && System.nanoTime() < deadline) {
-          Thread.sleep(50); st = c.doAction("job.status", ticket).asString
-        }
-        assert(st == "COMPLETE")
-        assert(c.doAction("info.jobs").asString.contains(ticket))
-        // unknown action and unknown ticket fail with the ERR contract
-        val e1 = intercept[IllegalArgumentException](c.doAction("nope"))
-        assert(e1.getMessage.contains("unsupported action"))
-        val e2 = intercept[IllegalArgumentException](
-          c.doAction("job.status", "no-such-ticket"))
-        assert(e2.getMessage.contains("no job for ticket"))
-        // Action proto itself: type=1, body=2
-        val afs = parse(FlightProto.Action.of("job.status", "T-1").encode)
-        assert(new String(b1(afs, 1), UTF_8) == "job.status")
-        assert(new String(b1(afs, 2), UTF_8) == "T-1")
-      } finally c.close()
-    } finally srv.close()
+    withFlight { (_, c) =>
+      // listActions: the reference's action vocabulary (job.status =
+      // StatusHandler, info.jobs/info.version = ServerInfoHandler)
+      val actions = c.listActions()
+      assert(actions.map(_.atype).toSet ==
+        Set("cypher.read", "gds.read", "job.status", "job.cancel",
+          "job.submit", "info.jobs", "info.version", "flight.log",
+          "flight.log.schema", "flight.log.tickets", "gds.write.nodes",
+          "gds.write.relationships"))
+      actions.foreach { a =>
+        val fs = parse(a.encode) // ActionType fields 1/2 per Flight.proto
+        assert(new String(b1(fs, 1), UTF_8) == a.atype)
+        assert(new String(b1(fs, 2), UTF_8) == a.description)
+      }
+      assert(c.doAction("info.version", "").asString.nonEmpty)
+      assert(c.doAction("INFO.VERSION", "").asString ==
+        c.doAction("info.version", "").asString) // case-insensitive dispatch
+      // ticketed job through the Action path end-to-end
+      c.doPut("tact", sample.coalesce(2))
+      val ticket = c.submitJob("job.submit", "tact".getBytes(UTF_8))
+      assert(ticket.nonEmpty)
+      var st = c.jobStatus(ticket)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (st != "COMPLETE" && System.nanoTime() < deadline) {
+        Thread.sleep(50); st = c.jobStatus(ticket)
+      }
+      assert(st == "COMPLETE")
+      assert(c.doAction("info.jobs", "").asString.contains(ticket))
+      // unknown action and unknown ticket fail with a grpc-status
+      val e1 = intercept[FlightGrpc.GrpcException](c.doAction("nope", ""))
+      assert(e1.code == FlightGrpc.Status.Unimplemented &&
+        e1.getMessage.contains("unsupported action"))
+      val e2 = intercept[FlightGrpc.GrpcException](
+        c.doAction("job.status", "no-such-ticket"))
+      assert(e2.code == FlightGrpc.Status.NotFound &&
+        e2.getMessage.contains("no job for ticket"))
+      // Action proto itself: type=1, body=2
+      val afs = parse(FlightProto.Action.of("job.status", "T-1").encode)
+      assert(new String(b1(afs, 1), UTF_8) == "job.status")
+      assert(new String(b1(afs, 2), UTF_8) == "T-1")
+    }
   }
 
+  // FINFO/FGET/FPUT are GetFlightInfo/DoGet/DoPut's short labels
   test("FINFO/FGET/FPUT round-trip a table over the loopback with " +
       "Flight-framed payloads") {
-    val srv = new IpcTransport.Server(spark, token = "sekrit").start()
-    try {
-      val c = new IpcTransport.Client("127.0.0.1", srv.port, "sekrit")
-      try {
-        assert(c.putFlight("t", sample.repartition(4)) == 300L)
-        val info = c.getFlightInfo("t")
-        assert(info.descriptor.path == Seq("t"))
-        assert(info.totalRecords == -1L && info.totalBytes == -1L)
-        assert(info.endpoints.map(_.ticket.asString) == Seq("t"))
-        assert(info.endpoints.head.locations.head.uri
-          == s"grpc+tcp://127.0.0.1:${srv.port}")
-        // FlightInfo.schema is a real IPC-encapsulated Schema message
-        val schema = org.apache.arrow.vector.ipc.message.MessageSerializer
-          .deserializeSchema(new org.apache.arrow.vector.ipc.ReadChannel(
-            java.nio.channels.Channels.newChannel(
-              new java.io.ByteArrayInputStream(info.schema))))
-        assert(schema.getFields.size() == 3)
-        // the first FlightData of each partition stream is its Schema
-        val frames = c.getFlightData("t")
-        val heads = frames.map(fd =>
-          FlightProto.isSchemaMessage(
-            FlightProto.IpcMessage(fd.dataHeader, fd.dataBody)))
-        assert(heads.count(identity) == 4) // one per partition stream
-        val got = c.getFlight(spark, "t")
-          .as[(Long, String, Double)].collect().sorted.toSeq
-        assert(got == sample.as[(Long, String, Double)].collect().sorted.toSeq)
-      } finally c.close()
-    } finally srv.close()
+    withFlight { (srv, c) =>
+      assert(c.doPut("t", sample.repartition(4)) == 300L)
+      val info = c.getFlightInfo("t")
+      assert(info.descriptor.path == Seq("t"))
+      assert(info.totalRecords == -1L && info.totalBytes == -1L)
+      // one endpoint per staged partition, ticket `t#<i>`
+      assert(info.endpoints.nonEmpty)
+      assert(info.endpoints.map(_.ticket.asString) ==
+        info.endpoints.indices.map(i => s"t#$i"))
+      assert(info.endpoints.head.locations.head.uri
+        == s"grpc+tcp://127.0.0.1:${srv.port}")
+      // FlightInfo.schema is a real IPC-encapsulated Schema message
+      val schema = org.apache.arrow.vector.ipc.message.MessageSerializer
+        .deserializeSchema(new org.apache.arrow.vector.ipc.ReadChannel(
+          java.nio.channels.Channels.newChannel(
+            new java.io.ByteArrayInputStream(info.schema))))
+      assert(schema.getFields.size() == 3)
+      // a DoGet is ONE logical Arrow stream: exactly one Schema message,
+      // leading, then the record batches of every partition
+      val frames = c.callOk("DoGet", Seq(FlightProto.Ticket.of("t").encode))
+        .map(FlightProto.FlightData.decode)
+      val heads = frames.map(fd =>
+        FlightProto.isSchemaMessage(
+          FlightProto.IpcMessage(fd.dataHeader, fd.dataBody)))
+      assert(heads.head && heads.count(identity) == 1)
+      val got = c.readFlight(spark, info)
+        .as[(Long, String, Double)].collect().sorted.toSeq
+      assert(got == sample.as[(Long, String, Double)].collect().sorted.toSeq)
+    }
   }
 }

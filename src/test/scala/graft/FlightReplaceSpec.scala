@@ -47,13 +47,13 @@ class FlightReplaceSpec extends AnyFunSuite {
     svc.retireGraceMs = 0L
     val df1 = Seq(1L, 2L, 3L).toDF("v")
     val df2 = Seq(10L, 20L).toDF("v")
-    svc.ingestFlightData("replace_me", df1.schema.toDDL, msgsOf(df1))
+    svc.ingestFlightData("replace_me", msgsOf(df1))
     val dir1 = stagedDir(svc, "replace_me")
     assert(dir1.exists(), s"stage dir derivation broken: $dir1")
     assert(stagedValues(svc, "replace_me") == Set(1L, 2L, 3L))
     // the regression: ingest paths that tables.put() without register()
     // leave `staged` pointing at the first upload's files
-    svc.ingestFlightData("replace_me", df2.schema.toDDL, msgsOf(df2))
+    svc.ingestFlightData("replace_me", msgsOf(df2))
     assert(stagedValues(svc, "replace_me") == Set(10L, 20L),
       "partitioned read served the REPLACED upload's rows")
     assert(!dir1.exists(),
