@@ -303,7 +303,7 @@ object SparkEntry {
     }),
     // r12 (VERDICT r11 #8): the khop_3_dense gate rides the stats
     // pushdown, so without this gate no bench-scale path would exercise
-    // the MATERIALIZING k≥3 skew build (kHopSkewBuild) — a regression
+    // the MATERIALIZING k≥3 skew build (kHopEdgesSkew) — a regression
     // there would only be felt by the toy-scale KHopSpec equivalence
     // property. This gate runs it on the FROM_NATION+IN_REGION graph
     // with hotThreshold=2: nations/regions (fan-in ≥5 at every SF)

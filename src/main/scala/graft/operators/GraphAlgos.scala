@@ -16,10 +16,10 @@ import graft.functions.VectorFunctions.round6
   * connected-components gates (Similarity.ivfTrained, Dedup.clusters).
   *
   * Scale design (100 TB):
-  *  - Iterative loops `localCheckpoint(eager=true)` each round — without
-  *    it round k re-executes rounds 1..k-1 (measured in round 2: the khop
-  *    skew plan re-scanned its source 78×). The checkpointed state is the
-  *    per-round frontier/rank table — O(|V|) rows, the small side.
+  *  - Iterative loops run on the [[Rounds]] driver: each round's state is
+  *    pinned by an eager localCheckpoint (O(|V|) rows, the small side)
+  *    and released once nothing can read it; the driver also owns the
+  *    frontier count, the broadcast hint and the loop-body plan dump.
   *  - Each round is one equi-join (edges ⋈ state on src) + one hash
   *    aggregate — the canonical Pregel step as Catalyst sees it. Edges
   *    stay partitioned by src across rounds; no driver-side collection.
@@ -31,40 +31,8 @@ import graft.functions.VectorFunctions.round6
   *    so the exact oracle verifies the plan without replicating it.
   */
 object GraphAlgos {
-
-  /** Broadcast-crossover constants for the iterative loops (hoisted r12,
-    * ADVICE r11: the raw numbers were duplicated across six loops with
-    * the sizing assumption implicit). The loops' per-round state tables
-    * come from localCheckpoints, which carry NO statistics — the planner
-    * cannot make the broadcast call itself, so the loops hint explicitly
-    * using their driver-known exact row counts.
-    *
-    *  - [[BroadcastFrontierRowCap]]: a frontier/rank/survivor row is two
-    *    int64s (+ row overhead) ≈ 16 B, so 2M rows ≈ 32 MB broadcast —
-    *    safe on any executor profile (well under the 8 GB/512M-row hard
-    *    cap, small against a 1 GB heap). Widening the row schema or
-    *    shrinking executors proportionally shrinks the cap: it exists to
-    *    bound build memory, not to tune the crossover.
-    *  - [[PerRoundBroadcastMinEdges]] / [[PageRankBroadcastMinEdges]]:
-    *    the hint only PAYS when the edge list it keeps un-shuffled is
-    *    big — each round spends one broadcast-BUILD job, measured at
-    *    sf0.1 (single host) to cost more than the small shuffle below
-    *    ~200k edge rows (sccColoring; +1.2 s without the gate) resp.
-    *    ~5M rows (pageRank's per-iteration rank broadcast; 600k-edge
-    *    graph measured 0.2 s faster WITHOUT the hint). Direction of
-    *    error is conservative: below the gate the loop falls back to the
-    *    ordinary shuffle join, which is never catastrophically wrong,
-    *    so single-host crossovers are safe defaults at any scale. */
-  private[graft] val BroadcastFrontierRowCap = 2000000L
-  private[graft] val PerRoundBroadcastMinEdges = 200000L
-  private[graft] val PageRankBroadcastMinEdges = 5000000L
-
-  /** Broadcast-hint a loop-state side whose exact row count the driver
-    * already knows (see the constants above for the sizing rationale). */
-  private[graft] def hintIfSmall(df: DataFrame, rows: Long,
-                                 cap: Long = BroadcastFrontierRowCap)
-      : DataFrame =
-    if (rows <= cap) broadcast(df) else df
+  import Rounds.{hintIfSmall, PageRankBroadcastMinEdges,
+    PerRoundBroadcastMinEdges}
 
   private def undirected(edges: DataFrame, a: String, b: String): DataFrame =
     edges.select(col(a).as("u"), col(b).as("v"))
@@ -95,19 +63,17 @@ object GraphAlgos {
     */
   def pageRank(rels: DataFrame, types: Seq[String], iters: Int,
                scale: Long = 1000000L,
-               seedPred: Option[Column] = None): DataFrame = {
+               seedPred: Option[Column] = None): DataFrame = Rounds.run { r =>
     val e = rels.where(col("TYPE").isin(types: _*))
       .select(col("START_ID").as("src"), col("END_ID").as("dst"))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
+    val nodes = r.pin(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     // out-degree fused onto each edge once — reused by every iteration
-    val eOd = e.join(
+    val eOd = r.pin(e.join(
         e.groupBy(col("src")).agg(count(lit(1)).as("d"))
           .withColumnRenamed("src", "od_src"),
         col("src") === col("od_src"))
-      .select(col("src"), col("dst"), col("d"))
-      .localCheckpoint(true)
+      .select(col("src"), col("dst"), col("d")))
     val base = (scale * 15L) / 100L
     // personalized variant: teleport mass (the `base` term and the initial
     // rank) only at seed nodes — everything else identical
@@ -115,7 +81,7 @@ object GraphAlgos {
       case None => lit(base)
       case Some(p) => when(p, lit(base)).otherwise(lit(0L))
     }
-    var ranks = nodes.withColumn("rank", seedPred match {
+    val ranks0 = nodes.withColumn("rank", seedPred match {
       case None => lit(scale)
       case Some(p) => when(p, lit(scale)).otherwise(lit(0L))
     })
@@ -132,20 +98,17 @@ object GraphAlgos {
     val eN = eOd.count()
     def hinted(df: DataFrame): DataFrame =
       if (eN >= PageRankBroadcastMinEdges) hintIfSmall(df, nodesN) else df
-    for (_ <- 1 to iters) {
+    r.fixed(ranks0, iters, "pagerank_loop_body") { ranks =>
       val contribs = eOd
         .join(hinted(ranks.withColumnRenamed("id", "r_id")),
           col("src") === col("r_id"))
         .select(col("dst"), expr("rank div d").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("csum"))
-      val ranks0 = nodes
+      nodes
         .join(hinted(contribs), col("id") === col("dst"), "left")
         .select(col("id"),
           (baseCol + expr("85 * coalesce(csum, 0L) div 100")).as("rank"))
-      graft.tools.LoopPlan.dump("pagerank_loop_body", ranks0)
-      ranks = ranks0.localCheckpoint(true)
     }
-    ranks
   }
 
   /** Weighted PageRank: contribution of u→v is ⌊rank(u)·w(u,v) /
@@ -153,38 +116,33 @@ object GraphAlgos {
     * Same teleport/damping integer scheme as [[pageRank]]; weights are
     * int64 (quantize floats upstream). */
   def pageRankWeighted(edges: DataFrame, iters: Int,
-                       scale: Long = 1000000L): DataFrame = {
+                       scale: Long = 1000000L): DataFrame = Rounds.run { r =>
     val e = edges.select(col("src"), col("dst"), col("w"))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    val eW = e.join(
+    val nodes = r.pin(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
+    val eW = r.pin(e.join(
         e.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
           .withColumnRenamed("src", "ws_src"),
         col("src") === col("ws_src"))
-      .select(col("src"), col("dst"), col("w"), col("wsum"))
-      .localCheckpoint(true)
+      .select(col("src"), col("dst"), col("w"), col("wsum")))
     val base = (scale * 15L) / 100L
-    var ranks = nodes.withColumn("rank", lit(scale))
     // known-size broadcast hints + crossover — see pageRank
     val nodesN = nodes.count()
     val eN = eW.count()
     def hinted(df: DataFrame): DataFrame =
       if (eN >= PageRankBroadcastMinEdges) hintIfSmall(df, nodesN) else df
-    for (_ <- 1 to iters) {
+    r.fixed(nodes.withColumn("rank", lit(scale)), iters,
+        "pagerank_weighted_loop_body") { ranks =>
       val contribs = eW
         .join(hinted(ranks.withColumnRenamed("id", "r_id")),
           col("src") === col("r_id"))
         .select(col("dst"), expr("(rank * w) div wsum").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("csum"))
-      val ranks0 = nodes
+      nodes
         .join(hinted(contribs), col("id") === col("dst"), "left")
         .select(col("id"),
           (lit(base) + expr("85 * coalesce(csum, 0L) div 100")).as("rank"))
-      graft.tools.LoopPlan.dump("pagerank_weighted_loop_body", ranks0)
-      ranks = ranks0.localCheckpoint(true)
     }
-    ranks
   }
 
   /** GDS nodeSimilarity analog: Jaccard similarity of neighbor sets over
@@ -223,10 +181,10 @@ object GraphAlgos {
     * deterministic, oracle-replayable prefix). Returns surviving (id,
     * deg) after `rounds` peels of the undirected graph. */
   def kCore(rels: DataFrame, types: Seq[String], k: Int,
-            rounds: Int): DataFrame = {
-    var und = undirected(
+            rounds: Int): DataFrame = Rounds.run { r =>
+    var und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .distinct().localCheckpoint(true)
+      .distinct())
     // same monotone early exit as kTruss: an unchanged count after a
     // peel round means an unchanged set, so remaining rounds are no-ops
     var prev = und.count()
@@ -238,20 +196,16 @@ object GraphAlgos {
       // both endpoint filters. Materialize surv once (checkpoint — it is
       // consumed twice) and broadcast it while small: the edge list then
       // streams through BOTH endpoint filters in one scan.
-      val surv = und.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k).select(col("u"))
-        .localCheckpoint(true)
+      val surv = r.pin(und.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+        .where(col("deg") >= k).select(col("u")))
       val survN = surv.count()
-      def hinted(df: DataFrame): DataFrame = hintIfSmall(df, survN)
-      val und0 = und
-        .join(hinted(surv.withColumnRenamed("u", "su")),
+      und = r.pin(und
+        .join(hintIfSmall(surv.withColumnRenamed("u", "su"), survN),
           col("u") === col("su"))
         .drop("su")
-        .join(hinted(surv.withColumnRenamed("u", "sv")),
+        .join(hintIfSmall(surv.withColumnRenamed("u", "sv"), survN),
           col("v") === col("sv"))
-        .drop("sv")
-      graft.tools.LoopPlan.dump("kcore_loop_body", und0)
-      und = und0.localCheckpoint(true)
+        .drop("sv"), "kcore_loop_body")
       val n = und.count()
       converged = n == prev
       prev = n
@@ -392,14 +346,13 @@ object GraphAlgos {
     * of the given rel types; nodes beyond maxHops are omitted. Classic
     * frontier expansion: visited ∪= neighbors(frontier) \ visited. */
   def bfsHops(rels: DataFrame, types: Seq[String], source: Long,
-              maxHops: Int): DataFrame = {
+              maxHops: Int): DataFrame = Rounds.run { r =>
     val spark = rels.sparkSession
-    val und = undirected(
+    val und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .distinct().localCheckpoint(true)
-    var visited = spark.range(1)
-      .select(lit(source).as("id"), lit(0L).as("dist"))
-      .localCheckpoint(true)
+      .distinct())
+    var visited = r.pin(spark.range(1)
+      .select(lit(source).as("id"), lit(0L).as("dist")))
     var frontier = visited.select(col("id"))
     // conditional broadcast hints (r11 opt): the frontier and visited
     // counts are known exactly in the driver, but the checkpointed
@@ -408,16 +361,14 @@ object GraphAlgos {
     // lets the edge list stream map-side.
     var frontierN = 1L
     var visitedN = 1L
-    def hinted(df: DataFrame, n: Long): DataFrame = hintIfSmall(df, n)
     for (k <- 1 to maxHops if frontierN > 0) {
-      val next = und
-        .join(hinted(frontier.withColumnRenamed("id", "f_id"), frontierN),
+      val next = r.pin(und
+        .join(hintIfSmall(frontier.withColumnRenamed("id", "f_id"), frontierN),
           col("u") === col("f_id"))
         .select(col("v").as("id")).distinct()
-        .join(hinted(visited, visitedN), Seq("id"), "left_anti")
-        .select(col("id"), lit(k.toLong).as("dist"))
-        .localCheckpoint(true)
-      visited = visited.union(next).localCheckpoint(true)
+        .join(hintIfSmall(visited, visitedN), Seq("id"), "left_anti")
+        .select(col("id"), lit(k.toLong).as("dist")))
+      visited = r.pin(visited.union(next))
       frontier = next.select(col("id"))
       // an empty frontier cannot grow again — remaining hops are no-ops
       frontierN = next.count()
@@ -467,28 +418,25 @@ object GraphAlgos {
     * iterate; the integer analog keeps the dataflow identical while
     * every value stays oracle-replayable. */
   def fastRP(rels: DataFrame, types: Seq[String], dim: Int,
-             iters: Int): DataFrame = {
-    val und = undirected(
+             iters: Int): DataFrame = Rounds.run { r =>
+    val und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .distinct().localCheckpoint(true)
+      .distinct())
     val deg = und.groupBy(col("u")).agg(count(lit(1)).as("d"))
     val nodes = und.select(col("u").as("id")).distinct()
-    var emb = nodes
+    val emb0 = r.pin(nodes
       .select(col("id"), explode(sequence(lit(0), lit(dim - 1))).as("j"))
       .withColumn("ev",
         ((col("id") % 1000003L) * (col("j") + 31L) + col("j") * 7919L)
-          % 1000003L % 201L - 100L)
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      emb = und
+          % 1000003L % 201L - 100L))
+    r.fixed(emb0, iters, "fastrp_loop_body") { emb =>
+      und
         .join(emb.withColumnRenamed("id", "e_id"), col("u") === col("e_id"))
         .groupBy(col("v").as("id"), col("j")).agg(sum(col("ev")).as("s"))
         .join(deg.withColumnRenamed("u", "d_id"), col("id") === col("d_id"))
         .select(col("id"), col("j"),
           (expr("(s + 1000000 * d) div d") - 1000000L).as("ev"))
-        .localCheckpoint(true)
     }
-    emb
   }
 
   /** Deterministic per-node neighbor sampling (the GraphSAGE-style fanout
@@ -525,23 +473,21 @@ object GraphAlgos {
     * is one join (edges ⋈ labels) + two hash aggregates (label counts,
     * then per-node argmax via min(struct(-cnt, lbl))). */
   def labelPropagation(rels: DataFrame, types: Seq[String],
-                       rounds: Int): DataFrame = {
-    val und = undirected(
+                       rounds: Int): DataFrame = Rounds.run { r =>
+    val und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .distinct().localCheckpoint(true)
-    var labels = und.select(col("u").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      labels = und
+      .distinct())
+    val labels0 = r.pin(und.select(col("u").as("id")).distinct()
+      .withColumn("lbl", col("id")))
+    r.fixed(labels0, rounds, "label_prop_loop_body") { labels =>
+      und
         .join(labels.withColumnRenamed("id", "l_id"), col("u") === col("l_id"))
         .groupBy(col("v"), col("lbl")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("v"))
         .agg(min(struct((-col("cnt")).as("neg"), col("lbl").as("lbl")))
           .as("best"))
         .select(col("v").as("id"), col("best.lbl").as("lbl"))
-        .localCheckpoint(true)
     }
-    labels
   }
 
   /** Graph contraction by a community assignment — the coarsening phase
@@ -577,35 +523,30 @@ object GraphAlgos {
     * Each half-step is the canonical Pregel round: one edges⋈state
     * equi-join + one map-side-combining sum per target. */
   def hits(rels: DataFrame, types: Seq[String], iters: Int,
-           scale: Long = 1000000L): DataFrame = {
-    val e = rels.where(col("TYPE").isin(types: _*))
+           scale: Long = 1000000L): DataFrame = Rounds.run { r =>
+    val e = r.pin(rels.where(col("TYPE").isin(types: _*))
       .select(col("START_ID").as("src"), col("END_ID").as("dst"))
-      .distinct().localCheckpoint(true)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
+      .distinct())
+    val nodes = r.pin(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     var hub = nodes.withColumn("hub", lit(scale))
     var auth = nodes.withColumn("auth", lit(0L))
     for (_ <- 1 to iters) {
-      // checkpointed: read twice per round (normalize join + its max)
-      val araw = e
+      // pinned: read twice per round (normalize join + its max)
+      val araw = r.pin(e
         .join(hub.withColumnRenamed("id", "h_id"), col("src") === col("h_id"))
-        .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("raw"))
-        .localCheckpoint(true)
-      auth = nodes.join(araw, Seq("id"), "left")
+        .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("raw")))
+      auth = r.pin(nodes.join(araw, Seq("id"), "left")
         .crossJoin(broadcast(araw.agg(max(col("raw")).as("mx"))))
         .select(col("id"),
-          expr(s"coalesce(raw, 0L) * ${scale}L div mx").as("auth"))
-        .localCheckpoint(true)
-      val hraw = e
+          expr(s"coalesce(raw, 0L) * ${scale}L div mx").as("auth")))
+      val hraw = r.pin(e
         .join(auth.withColumnRenamed("id", "a_id"), col("dst") === col("a_id"))
-        .groupBy(col("src").as("id")).agg(sum(col("auth")).as("raw"))
-        .localCheckpoint(true)
-      hub = nodes.join(hraw, Seq("id"), "left")
+        .groupBy(col("src").as("id")).agg(sum(col("auth")).as("raw")))
+      hub = r.pin(nodes.join(hraw, Seq("id"), "left")
         .crossJoin(broadcast(hraw.agg(max(col("raw")).as("mx"))))
         .select(col("id"),
-          expr(s"coalesce(raw, 0L) * ${scale}L div mx").as("hub"))
-        .localCheckpoint(true)
+          expr(s"coalesce(raw, 0L) * ${scale}L div mx").as("hub")))
     }
     hub.join(auth, "id").select(col("id"), col("hub"), col("auth"))
   }
@@ -628,28 +569,26 @@ object GraphAlgos {
     * + a 1-row broadcast max — the Pregel shape, no windows, no
     * collects. */
   def eigenvectorCentrality(rels: DataFrame, types: Seq[String],
-                            iters: Int,
-                            scale: Long = 1000000L): DataFrame = {
+                            iters: Int, scale: Long = 1000000L)
+      : DataFrame = Rounds.run { r =>
     val e0 = rels.where(col("TYPE").isin(types: _*))
       .select(col("START_ID").as("src"), col("END_ID").as("dst"))
-    val e = e0.unionByName(e0.select(col("dst").as("src"),
+    val e = r.pin(e0.unionByName(e0.select(col("dst").as("src"),
         col("src").as("dst")))
-      .distinct().localCheckpoint(true)
-    val nodes = e.select(col("src").as("id")).distinct()
-      .localCheckpoint(true)           // symmetric: src covers every node
-    var x = nodes.withColumn("score", lit(scale))
-    for (_ <- 1 to iters) {
-      val c = e
+      .distinct())
+    // symmetric: src covers every node
+    val nodes = r.pin(e.select(col("src").as("id")).distinct())
+    r.fixed(nodes.withColumn("score", lit(scale)), iters,
+        "eigenvector_loop_body") { x =>
+      // pinned: read twice (normalize + its max)
+      val c = r.pin(e
         .join(x.withColumnRenamed("id", "x_id"), col("src") === col("x_id"))
-        .groupBy(col("dst").as("id")).agg(sum(col("score")).as("raw"))
-        .localCheckpoint(true)         // read twice: normalize + its max
-      x = nodes.join(c, Seq("id"), "left")
+        .groupBy(col("dst").as("id")).agg(sum(col("score")).as("raw")))
+      nodes.join(c, Seq("id"), "left")
         .crossJoin(broadcast(c.agg(max(col("raw")).as("mx"))))
         .select(col("id"),
           expr(s"coalesce(raw, 0L) * ${scale}L div mx").as("score"))
-        .localCheckpoint(true)
     }
-    x
   }
 
   /** Shared multi-source BFS over the undirected projection of `types`
@@ -662,24 +601,23 @@ object GraphAlgos {
     * two loops had diverged into copy-paste); both consumers are folds
     * over the returned (s, id, dist) table. */
   private def multiSourceBfs(rels: DataFrame, types: Seq[String],
-                             seedPred: Column, maxHops: Int): DataFrame = {
-    val und = undirected(
+                             seedPred: Column, maxHops: Int)
+      : DataFrame = Rounds.run { r =>
+    val und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .distinct().localCheckpoint(true)
+      .distinct())
     val seeds = und.select(col("u").as("id")).distinct().where(seedPred)
-    var visited = seeds
-      .select(col("id").as("s"), col("id"), lit(0L).as("dist"))
-      .localCheckpoint(true)
+    var visited = r.pin(seeds
+      .select(col("id").as("s"), col("id"), lit(0L).as("dist")))
     var frontier = visited.select(col("s"), col("id"))
     for (k <- 1 to maxHops) {
-      val next = und
+      val next = r.pin(und
         .join(frontier.withColumnRenamed("id", "f_id"),
           col("u") === col("f_id"))
         .select(col("s"), col("v").as("id")).distinct()
         .join(visited, Seq("s", "id"), "left_anti")
-        .withColumn("dist", lit(k.toLong))
-        .localCheckpoint(true)
-      visited = visited.union(next).localCheckpoint(true)
+        .withColumn("dist", lit(k.toLong)))
+      visited = r.pin(visited.union(next))
       frontier = next.select(col("s"), col("id"))
     }
     visited
@@ -785,26 +723,24 @@ object GraphAlgos {
     * the deliberate bound. Returns (id, bc_scaled) for nodes with a
     * nonzero dependency row. */
   def betweenness(rels: DataFrame, types: Seq[String], seedPred: Column,
-                  maxHops: Int, scale: Long = 1000000L): DataFrame = {
-    val und = undirected(
+                  maxHops: Int, scale: Long = 1000000L)
+      : DataFrame = Rounds.run { r =>
+    val und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .distinct().localCheckpoint(true)
+      .distinct())
     val seeds = und.select(col("u").as("id")).distinct().where(seedPred)
     // forward: levels(d) = (s, id, sigma) at exact distance d
-    var levels = Vector(seeds
-      .select(col("id").as("s"), col("id"), lit(1L).as("sigma"))
-      .localCheckpoint(true))
+    var levels = Vector(r.pin(seeds
+      .select(col("id").as("s"), col("id"), lit(1L).as("sigma"))))
     var visited = levels(0).select(col("s"), col("id"))
     for (_ <- 1 to maxHops) {
-      val next = und
+      val next = r.pin(und
         .join(levels.last.withColumnRenamed("id", "f_id"),
           col("u") === col("f_id"))
         .groupBy(col("s"), col("v").as("id"))
         .agg(sum(col("sigma")).as("sigma"))
-        .join(visited, Seq("s", "id"), "left_anti")
-        .localCheckpoint(true)
-      visited = visited.union(next.select(col("s"), col("id")))
-        .localCheckpoint(true)
+        .join(visited, Seq("s", "id"), "left_anti"))
+      visited = r.pin(visited.union(next.select(col("s"), col("id"))))
       levels = levels :+ next
     }
     // backward: dep carries (s, id, sigma, dep) for ONE level at a time,
@@ -823,11 +759,10 @@ object GraphAlgos {
         .select(col("s"), col("id"),
           expr(s"sigma * (${scale}L + wdep) div wsigma").as("c"))
         .groupBy(col("s"), col("id")).agg(sum(col("c")).as("c"))
-      dep = levels(d)
+      dep = r.pin(levels(d)
         .join(contrib.withColumnRenamed("c", "dep"), Seq("s", "id"), "left")
         .select(col("s"), col("id"), col("sigma"),
-          coalesce(col("dep"), lit(0L)).as("dep"))
-        .localCheckpoint(true)
+          coalesce(col("dep"), lit(0L)).as("dep")))
       acc = acc :+ dep.select(col("s"), col("id"), col("dep"))
     }
     acc.reduceOption(_ union _)
@@ -857,16 +792,15 @@ object GraphAlgos {
     *
     * Returns (id, lbl) after `rounds` synchronous move rounds. */
   def louvainMove(rels: DataFrame, types: Seq[String],
-                  rounds: Int): DataFrame = {
-    val und = undirected(
+                  rounds: Int): DataFrame = Rounds.run { r =>
+    val und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .distinct().localCheckpoint(true)
-    val deg = und.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .distinct())
+    val deg = r.pin(
+      und.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg")))
     val twoM = und.agg(count(lit(1)).as("two_m"))
-    var labels = deg.select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+    val labels0 = r.pin(deg.select(col("id"), col("id").as("lbl")))
+    r.fixed(labels0, rounds, "louvain_move_loop_body") { labels =>
       val tot = labels
         .join(deg.withColumnRenamed("id", "d_id"), col("id") === col("d_id"))
         .groupBy(col("lbl")).agg(sum(col("deg")).as("tot"))
@@ -880,7 +814,7 @@ object GraphAlgos {
       val cand = nbl
         .union(labels.select(col("id"), col("lbl"), lit(0L).as("kc")))
         .groupBy(col("id"), col("lbl")).agg(max(col("kc")).as("kc"))
-      labels = cand
+      cand
         .join(labels.select(col("id"), col("lbl").as("own")), "id")
         .join(deg.select(col("id"), col("deg")), "id")
         .join(tot, "lbl")
@@ -893,9 +827,7 @@ object GraphAlgos {
         .agg(min(struct((-col("score")).as("neg"), col("lbl").as("lbl")))
           .as("best"))
         .select(col("id"), col("best.lbl").as("lbl"))
-        .localCheckpoint(true)
     }
-    labels
   }
 
   /** k-truss decomposition (bounded peel rounds): iteratively drop edges
@@ -911,9 +843,10 @@ object GraphAlgos {
     * + hash aggregate. The triangle SET is orientation-invariant, so an
     * id-oriented oracle verifies the degree-oriented plan. Input must be
     * distinct canonical edges (a < b); returns the surviving edges. */
-  def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int,
+             rounds: Int): DataFrame = Rounds.run { r =>
     require(k >= 3, "k-truss needs k >= 3")
-    var e = edges.select(col("a"), col("b")).distinct().localCheckpoint(true)
+    var e = r.pin(edges.select(col("a"), col("b")).distinct())
     // early exit once a round peels nothing: peeling is monotone
     // (edges only leave), so an unchanged count means an unchanged SET
     // and every further round is an identity — the result is exactly
@@ -924,15 +857,14 @@ object GraphAlgos {
     for (_ <- 1 to rounds if !converged) {
       val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      val oriented = e
+      val oriented = r.pin(e
         .join(deg.select(col("n").as("a"), col("deg").as("da")), "a")
         .join(deg.select(col("n").as("b"), col("deg").as("db")), "b")
         .select(
           when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
             struct(col("a").as("x"), col("b").as("y")))
             .otherwise(struct(col("b").as("x"), col("a").as("y"))).as("o"))
-        .select(col("o.x").as("x"), col("o.y").as("y"))
-        .localCheckpoint(true)
+        .select(col("o.x").as("x"), col("o.y").as("y")))
       val or1 = spreadBy(oriented, col("x"))
       val tri = or1.as("o1")
         .join(or1.as("o2"),
@@ -950,10 +882,9 @@ object GraphAlgos {
           struct(col("q").as("a"), col("r").as("b")))).as("pe"))
         .groupBy(col("pe.a").as("a"), col("pe.b").as("b"))
         .agg(count(lit(1)).as("support"))
-      e = e.join(sup, Seq("a", "b"))
+      e = r.pin(e.join(sup, Seq("a", "b"))
         .where(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
+        .select(col("a"), col("b")))
       val n = e.count()
       converged = n == prev
       prev = n
@@ -982,31 +913,28 @@ object GraphAlgos {
     * (stopping only if a node has no out-edges — impossible on an
     * undirected projection). Returns long-form (walk_id, step, node). */
   def randomWalks(rels: DataFrame, types: Seq[String], starts: Int,
-                  length: Int): DataFrame = {
+                  length: Int): DataFrame = Rounds.run { r =>
     val und = undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
       .distinct()
-    val nbArr = und.groupBy(col("u"))
+    val nbArr = r.pin(und.groupBy(col("u"))
       .agg(sort_array(collect_set(col("v"))).as("nb"))
-      .select(col("u").as("node"), col("nb"))
-      .localCheckpoint(true)
+      .select(col("u").as("node"), col("nb")))
     val origins = nbArr.select(col("node").as("id"))
-    var cur = origins
+    var cur = r.pin(origins
       .select(explode(sequence(lit(0), lit(starts - 1))).as("w"),
         col("id"))
       .select((col("id") * starts + col("w")).as("walk_id"),
-        col("id").as("node"))
-      .localCheckpoint(true)
+        col("id").as("node")))
     var out = cur.withColumn("step", lit(0L))
     for (k <- 1 to length) {
       val h = ((col("walk_id") * 31L + lit(k.toLong)) % 1000000007L *
         2654435761L) % 1000000007L
-      cur = cur
+      cur = r.pin(cur
         .join(nbArr, Seq("node"))
         .select(col("walk_id"),
           element_at(col("nb"), (h % size(col("nb")) + 1L).cast("int"))
-            .as("node"))
-        .localCheckpoint(true)
+            .as("node")))
       out = out.union(cur.withColumn("step", lit(k.toLong)))
     }
     out.select(col("walk_id"), col("step"), col("node"))
@@ -1040,7 +968,7 @@ object GraphAlgos {
                     length: Int, wReturn: Long, wStay: Long,
                     wFar: Long,
                     originPred: Option[Column] = None,
-                    maxNb: Int = Int.MaxValue): DataFrame = {
+                    maxNb: Int = Int.MaxValue): DataFrame = Rounds.run { r =>
     val und = undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
       .distinct()
@@ -1061,18 +989,16 @@ object GraphAlgos {
         key = "u", ord = "neg_hv", tiebreak = "v", payload = "v",
         k = maxNb)
         .select(col("u"), col("v"))
-    val nbArr = nbEdges.groupBy(col("u"))
+    val nbArr = r.pin(nbEdges.groupBy(col("u"))
       .agg(sort_array(collect_set(col("v"))).as("nb"))
-      .select(col("u").as("node"), col("nb"))
-      .localCheckpoint(true)
+      .select(col("u").as("node"), col("nb")))
     // originPred bounds the WALK SET (sampled-origin training is the
     // norm); per-step cost still rides hub degrees — see class note
     val origins0 = nbArr.select(col("node").as("id"))
-    var cur = originPred.fold(origins0)(p => origins0.where(p))
+    var cur = r.pin(originPred.fold(origins0)(p => origins0.where(p))
       .select(explode(sequence(lit(0), lit(starts - 1))).as("w"), col("id"))
       .select((col("id") * starts + col("w")).as("walk_id"),
-        col("id").as("prev"), col("id").as("node"))
-      .localCheckpoint(true)
+        col("id").as("prev"), col("id").as("node")))
     var out = cur.select(col("walk_id"), lit(0L).as("step"), col("node"))
     for (k <- 1 to length) {
       val h = ((col("walk_id") * 31L + lit(k.toLong)) % 1000000007L *
@@ -1136,7 +1062,7 @@ object GraphAlgos {
           staged.select(col("walk_id"), col("node").as("prev"),
             pick.as("node"))
         }
-      cur = stepped.localCheckpoint(true)
+      cur = r.pin(stepped)
       out = out.union(cur.select(col("walk_id"),
         lit(k.toLong).as("step"), col("node")))
     }
@@ -1152,52 +1078,28 @@ object GraphAlgos {
     * is also the standard cycle detector: a level > rounds−1 ⇒ cycle).
     * Each round is one equi-join + one max aggregate, map-side
     * combined. Returns (id, lvl). */
-  def dagLevels(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
+  def dagLevels(edges: DataFrame, rounds: Int): DataFrame = Rounds.run { r =>
+    val e = r.pin(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst"))).distinct()
-    var lvl = nodes.select(col("id"), lit(0L).as("lvl"))
-      .localCheckpoint(true)
-    // DELTA iteration (r11 opt, guide §1.2 "the distributed algorithm"):
-    // max-merge is idempotent, so a node whose level did NOT change in
-    // round r−1 contributes exactly what it already contributed — only
-    // the CHANGED frontier needs to join the edge list. Identical
-    // per-round levels by induction; on this data round 1 touches every
-    // node and rounds 2..k shrink geometrically (the old full recompute
-    // re-joined all |E|×|V| every round). The empty frontier is the same
-    // fixpoint the old sum(lvl) check detected (levels only grow), one
-    // action per round either way.
-    var frontier = lvl
-    var frontierN = frontier.count()
-    for (_ <- 1 to rounds if frontierN > 0) {
-      // the frontier's exact row count is already in hand (the loop
-      // condition) — when it fits, broadcast it so the edge list streams
-      // map-side instead of re-shuffling all |E| every round (checkpointed
-      // tables carry no size statistics, so the planner can't make this
-      // call itself). 2M rows × 16 B ≈ 32 MB broadcast, safe at any
-      // executor size; above that the ordinary shuffle join is right.
-      val f = hintIfSmall(frontier, frontierN)
+    val lvl0 = r.pin(nodes.select(col("id"), lit(0L).as("lvl")))
+    // delta iteration: max-merge is idempotent, so a node whose level did
+    // NOT change in round r−1 contributes exactly what it already
+    // contributed — only the CHANGED frontier joins the edge list.
+    // Identical per-round levels by induction; round 1 touches every node
+    // and later rounds shrink geometrically.
+    r.delta(lvl0, rounds, "dag_levels_loop_body") { (lvl, f) =>
       val contrib = e
         .join(f.select(col("id").as("src"), col("lvl").as("sl")),
           "src")
         .groupBy(col("dst").as("id"))
         .agg((max(col("sl")) + 1L).as("cand"))
-      val merged0 = lvl.join(contrib, Seq("id"), "left")
+      lvl.join(contrib, Seq("id"), "left")
         .select(col("id"),
           greatest(col("lvl"), coalesce(col("cand"), col("lvl")))
             .as("nl"),
           (coalesce(col("cand"), col("lvl")) > col("lvl")).as("chg"))
-      // loop-BODY plan evidence (r12): the checkpoint hides this join from
-      // any whole-query explain; no-op unless the LoopPlan dir is set
-      graft.tools.LoopPlan.dump("dag_levels_loop_body", merged0)
-      val merged = merged0.localCheckpoint(true)
-      lvl = merged.select(col("id"), col("nl").as("lvl"))
-      frontier = merged.where(col("chg"))
-        .select(col("id"), col("nl").as("lvl"))
-      frontierN = frontier.count()
     }
-    lvl
   }
 
   /** Bellman-Ford single-source shortest path, fixed relaxation rounds,
@@ -1205,47 +1107,30 @@ object GraphAlgos {
     * dist_k(u)+w) — pure min/+ on int64, exact in any engine. Nodes not
     * reached within `rounds` relaxations are omitted (standard BF gives
     * exact distances for paths of ≤ rounds edges). */
-  def sssp(edges: DataFrame, source: Long, rounds: Int): DataFrame = {
+  def sssp(edges: DataFrame, source: Long,
+           rounds: Int): DataFrame = Rounds.run { r =>
     val spark = edges.sparkSession
     // both directions with the weight carried (undirected() drops extras)
-    val e2 = edges.select(col("src").as("u"), col("dst").as("v"), col("w"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v"), col("w")))
-      .localCheckpoint(true)
-    var dist = spark.range(1)
-      .select(lit(source).as("id"), lit(0L).as("d"))
-      .localCheckpoint(true)
-    // delta Bellman-Ford (r11 opt, the dagLevels pattern): a node whose
-    // tentative distance did not improve last round contributes exactly
-    // the relaxations it already contributed — only the IMPROVED
-    // frontier re-joins the edge list, broadcast while it fits (its
-    // exact count is the loop condition; checkpointed tables carry no
-    // stats, so the planner can't choose this itself). Same dist_k per
-    // round by the standard min-idempotence induction; an empty
-    // frontier makes the remaining rounds no-ops, which is also the
-    // exact-rounds contract of the fixed-iteration original.
-    var frontier = dist
-    var frontierN = frontier.count()
-    for (_ <- 1 to rounds if frontierN > 0) {
-      val f = hintIfSmall(frontier, frontierN)
+    val e2 = r.pin(edges
+      .select(col("src").as("u"), col("dst").as("v"), col("w"))
+      .union(edges.select(col("dst").as("u"), col("src").as("v"), col("w"))))
+    val dist0 = r.pin(spark.range(1)
+      .select(lit(source).as("id"), lit(0L).as("d")))
+    // delta Bellman-Ford (the dagLevels induction with min): only the
+    // IMPROVED frontier re-joins the edge list; same dist_k per round.
+    r.delta(dist0, rounds, "sssp_loop_body") { (dist, f) =>
       val relaxed = e2
         .join(f.withColumnRenamed("id", "d_id"), col("u") === col("d_id"))
         .groupBy(col("v").as("id"))
         .agg(min(col("d") + col("w")).as("nd"))
       val inf = Long.MaxValue
-      val merged0 = dist.join(relaxed, Seq("id"), "full")
+      dist.join(relaxed, Seq("id"), "full")
         .select(col("id"),
           least(coalesce(col("d"), lit(inf)), coalesce(col("nd"), lit(inf)))
             .as("ndist"),
           (coalesce(col("nd"), lit(inf)) < coalesce(col("d"), lit(inf)))
             .as("chg"))
-      graft.tools.LoopPlan.dump("sssp_loop_body", merged0)
-      val merged = merged0.localCheckpoint(true)
-      dist = merged.select(col("id"), col("ndist").as("d"))
-      frontier = merged.where(col("chg"))
-        .select(col("id"), col("ndist").as("d"))
-      frontierN = frontier.count()
     }
-    dist
   }
 
   /** One forward–backward coloring pass of distributed SCC decomposition
@@ -1264,51 +1149,37 @@ object GraphAlgos {
     * All labels are int64 node ids, min-combined — exact in any engine.
     * Scale: each direction-round is one edges⋈labels equi-join + one
     * map-side-combining min per target (the canonical Pregel step);
-    * labels localCheckpoint per round so round k never re-executes
-    * rounds 1..k-1. Monotone early exit: sum(lbl) only decreases, an
-    * unchanged sum is the fixpoint.
+    * labels are pinned per round ([[Rounds.delta]]) so round k never
+    * re-executes rounds 1..k-1; an empty changed frontier is the
+    * fixpoint.
     *
     * Reference analog: GDS scc consumer over streamed graphs
     * (plugin/.../gds/GdsReadJob.java). Returns (id, scc, resolved 0/1).
     */
-  def sccColoring(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
+  def sccColoring(edges: DataFrame,
+                  rounds: Int): DataFrame = Rounds.run { r =>
+    val e = r.pin(edges.select(col("src"), col("dst")).distinct())
     // broadcast hints only pay when the edge list they keep un-shuffled
     // is big; on a small graph the per-round broadcast-build job is pure
     // overhead (measured +1.2 s on the 24k-edge scc gate). One count on
     // the checkpointed table.
     val eN = e.count()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst"))).distinct()
-      .localCheckpoint(true)
+    val nodes = r.pin(e.select(col("src").as("id"))
+      .union(e.select(col("dst"))).distinct())
+    // delta iteration — the dagLevels induction with min
     def minLabel(rev: Boolean): DataFrame = {
       val (from, to) = if (rev) ("dst", "src") else ("src", "dst")
-      var lbl = nodes.withColumn("lbl", col("id")).localCheckpoint(true)
-      // delta iteration + conditional frontier broadcast — the dagLevels
-      // pattern (min-merge is idempotent, so only CHANGED labels need to
-      // re-propagate; identical per-round labels by induction, and the
-      // empty frontier is the fixpoint the old sum check detected)
-      var frontier = lbl
-      var frontierN = frontier.count()
-      for (_ <- 1 to rounds if frontierN > 0) {
-        val f = if (eN >= PerRoundBroadcastMinEdges)
-          hintIfSmall(frontier, frontierN) else frontier
+      r.delta(r.pin(nodes.withColumn("lbl", col("id"))), rounds,
+          "scc_coloring_loop_body",
+          hint = eN >= PerRoundBroadcastMinEdges) { (lbl, f) =>
         val prop = e
           .join(f.select(col("id").as(from), col("lbl").as("in_lbl")), from)
           .groupBy(col(to).as("id")).agg(min(col("in_lbl")).as("p"))
-        val merged0 = lbl.join(prop, Seq("id"), "left")
+        lbl.join(prop, Seq("id"), "left")
           .select(col("id"),
             least(col("lbl"), coalesce(col("p"), col("lbl"))).as("nl"),
             (coalesce(col("p"), col("lbl")) < col("lbl")).as("chg"))
-        graft.tools.LoopPlan.dump("scc_coloring_loop_body", merged0)
-        val merged = merged0.localCheckpoint(true)
-        lbl = merged.select(col("id"), col("nl").as("lbl"))
-        frontier = merged.where(col("chg"))
-          .select(col("id"), col("nl").as("lbl"))
-        frontierN = frontier.count()
       }
-      lbl
     }
     val fwd = minLabel(rev = false).withColumnRenamed("lbl", "f")
     val bwd = minLabel(rev = true).withColumnRenamed("lbl", "b")
@@ -1362,29 +1233,29 @@ object GraphAlgos {
     * Scale: per round one edges⋈live join + min-aggregate (Pregel step)
     * and one anti-join shrink; live/mis localCheckpoint per round.
     * Returns (id, mis_round). */
-  def misLuby(rels: DataFrame, types: Seq[String], rounds: Int): DataFrame = {
-    val und = undirected(
+  def misLuby(rels: DataFrame, types: Seq[String],
+              rounds: Int): DataFrame = Rounds.run { r =>
+    val und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .distinct().localCheckpoint(true)
+      .distinct())
     val keyExpr = expr(
       "((id % 1000003) * (id % 1000003) % 1000003 * 31 + id % 1000003)" +
         " % 1000003 * 10000000000 + id")
-    var live = und.select(col("u").as("id")).distinct()
-      .withColumn("key", keyExpr).localCheckpoint(true)
+    var live = r.pin(und.select(col("u").as("id")).distinct()
+      .withColumn("key", keyExpr))
     var mis: DataFrame = null
-    for (r <- 1 to rounds) {
+    for (k <- 1 to rounds) {
       val nbMin = und
         .join(live.select(col("id").as("u"), col("key").as("nk")), "u")
         .groupBy(col("v").as("id")).agg(min(col("nk")).as("mk"))
-      val won = live.join(nbMin, Seq("id"), "left")
+      val won = r.pin(live.join(nbMin, Seq("id"), "left")
         .where(col("mk").isNull || col("key") < col("mk"))
-        .select(col("id"), lit(r.toLong).as("mis_round"))
-        .localCheckpoint(true)
+        .select(col("id"), lit(k.toLong).as("mis_round")))
       mis = if (mis == null) won else mis.union(won)
       val removed = won.select(col("id").as("u"))
         .join(und, "u").select(col("v").as("id"))
         .union(won.select(col("id"))).distinct()
-      live = live.join(removed, Seq("id"), "left_anti").localCheckpoint(true)
+      live = r.pin(live.join(removed, Seq("id"), "left_anti"))
     }
     mis
   }
@@ -1489,16 +1360,15 @@ object GraphAlgos {
     * engines). Returns one row per hop 0..hops:
     * (hop, n_nodes, sum_ball_x1000) — the ANF curve as exact int64. */
   def hyperBall(rels: DataFrame, types: Seq[String], hops: Int,
-                m: Int = 16): DataFrame = {
-    val und = undirected(
+                m: Int = 16): DataFrame = Rounds.run { r =>
+    val und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .where(col("u") =!= col("v")).distinct().localCheckpoint(true)
+      .where(col("u") =!= col("v")).distinct())
     val nodes = und.select(col("u").as("node")).distinct()
-    var reg = Sketches.hllBuildGrouped(
-        nodes.select(col("node"), col("node").as("k")), Seq("node"), "k", m)
-      .localCheckpoint(true)
-    def summarize(h: Int, r: DataFrame): DataFrame =
-      r.groupBy(col("node"))
+    var reg = r.pin(Sketches.hllBuildGrouped(
+      nodes.select(col("node"), col("node").as("k")), Seq("node"), "k", m))
+    def summarize(h: Int, reg: DataFrame): DataFrame =
+      reg.groupBy(col("node"))
         .agg(count(lit(1)).as("n_present"),
           sum(expr("shiftleft(1L, cast(40 - register as int))"))
             .as("sum_present"))
@@ -1513,10 +1383,9 @@ object GraphAlgos {
     for (h <- 1 to hops) {
       val prop = und.join(reg.withColumnRenamed("node", "u"), "u")
         .select(col("v").as("node"), col("bucket"), col("register"))
-      reg = reg.unionByName(prop)
+      reg = r.pin(reg.unionByName(prop)
         .groupBy(col("node"), col("bucket"))
-        .agg(max(col("register")).as("register"))
-        .localCheckpoint(true)
+        .agg(max(col("register")).as("register")))
       out = out.unionByName(summarize(h, reg))
     }
     out
@@ -1541,17 +1410,17 @@ object GraphAlgos {
     * (same bounded-round contract as the mis_round gate). Returns
     * (id, color, color_round). */
   def jpColoring(rels: DataFrame, types: Seq[String],
-                 rounds: Int): DataFrame = {
-    val und = undirected(
+                 rounds: Int): DataFrame = Rounds.run { r =>
+    val und = r.pin(undirected(
         rels.where(col("TYPE").isin(types: _*)), "START_ID", "END_ID")
-      .where(col("u") =!= col("v")).distinct().localCheckpoint(true)
+      .where(col("u") =!= col("v")).distinct())
     val keyExpr = expr(
       "((id % 1000003) * (id % 1000003) % 1000003 * 31 + id % 1000003)" +
         " % 1000003 * 10000000000 + id")
-    var uncolored = und.select(col("u").as("id")).distinct()
-      .withColumn("key", keyExpr).localCheckpoint(true)
+    var uncolored = r.pin(und.select(col("u").as("id")).distinct()
+      .withColumn("key", keyExpr))
     var colored: DataFrame = null
-    for (r <- 1 to rounds) {
+    for (k <- 1 to rounds) {
       val nbMax = und
         .join(uncolored.select(col("id").as("u"), col("key").as("nk")),
           "u")
@@ -1568,7 +1437,7 @@ object GraphAlgos {
             Seq("nb"))
           .groupBy(col("id"))
           .agg(array_sort(collect_set(col("color"))).as("cs"))
-      val won = ready.join(ncs, Seq("id"), "left")
+      val won = r.pin(ready.join(ncs, Seq("id"), "left")
         .withColumn("cs",
           coalesce(col("cs"), array().cast("array<bigint>")))
         // mex: sequence(0, size) always holds >= 1 value missing from a
@@ -1577,11 +1446,10 @@ object GraphAlgos {
           expr("filter(transform(sequence(0, size(cs)), " +
             "c -> CAST(c AS BIGINT)), c -> NOT array_contains(cs, c))[0]")
             .as("color"),
-          lit(r.toLong).as("color_round"))
-        .localCheckpoint(true)
+          lit(k.toLong).as("color_round")))
       colored = if (colored == null) won else colored.union(won)
-      uncolored = uncolored.join(won.select(col("id")), Seq("id"),
-        "left_anti").localCheckpoint(true)
+      uncolored = r.pin(uncolored.join(won.select(col("id")), Seq("id"),
+        "left_anti"))
     }
     colored
   }
@@ -1599,17 +1467,17 @@ object GraphAlgos {
     * localCheckpoint barriers like every iterative algorithm here.
     * Input (a, b) directed or undirected — canonicalized and
     * deduplicated internally. Returns (a, b, match_round). */
-  def maximalMatching(edges: DataFrame, rounds: Int): DataFrame = {
+  def maximalMatching(edges: DataFrame,
+                      rounds: Int): DataFrame = Rounds.run { r =>
     val p = 1000003L
-    var live = edges
+    var live = r.pin(edges
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b")).distinct()
       .withColumn("key",
-        expr(s"((a % $p) * (b % $p) % $p * 31 + (a + b) % $p) % $p"))
-      .localCheckpoint(true)
+        expr(s"((a % $p) * (b % $p) % $p * 31 + (a + b) % $p) % $p")))
     var matched: DataFrame = null
-    for (r <- 1 to rounds) {
+    for (k <- 1 to rounds) {
       val inc = live.select(col("a").as("n"), col("key"), col("a"),
           col("b"))
         .union(live.select(col("b").as("n"), col("key"), col("a"),
@@ -1617,19 +1485,17 @@ object GraphAlgos {
       val vmin = inc.groupBy(col("n"))
         .agg(min(struct(col("key"), col("a"), col("b"))).as("m"))
       val me = struct(col("key"), col("a"), col("b"))
-      val won = live
+      val won = r.pin(live
         .join(vmin.select(col("n").as("a"), col("m").as("ma")), "a")
         .join(vmin.select(col("n").as("b"), col("m").as("mb")), "b")
         .where(me === col("ma") && me === col("mb"))
-        .select(col("a"), col("b"), lit(r.toLong).as("match_round"))
-        .localCheckpoint(true)
+        .select(col("a"), col("b"), lit(k.toLong).as("match_round")))
       matched = if (matched == null) won else matched.union(won)
       val mv = won.select(col("a").as("n"))
         .union(won.select(col("b").as("n"))).distinct()
-      live = live
+      live = r.pin(live
         .join(mv.select(col("n").as("a")), Seq("a"), "left_anti")
-        .join(mv.select(col("n").as("b")), Seq("b"), "left_anti")
-        .localCheckpoint(true)
+        .join(mv.select(col("n").as("b")), Seq("b"), "left_anti"))
     }
     matched
   }

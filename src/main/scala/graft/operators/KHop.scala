@@ -95,7 +95,7 @@ object KHop {
   def kHopEdgesSkew(rels: DataFrame, k: Int, hotThreshold: Long,
                     originPred: Option[Column] = None,
                     persist: Boolean = true): DataFrame =
-    kHopSkewBuild(rels, k, hotThreshold, originPred, persist)._1
+    kHopSkewPlan(new SkewCore(rels, k, hotThreshold, originPred, persist))
 
   /** [[kHopEdgesSkew]] with deterministic cache release: runs `f` on the
     * result, then unpersists every table the build cached. Materialize the
@@ -144,7 +144,7 @@ object KHop {
                     originPred: Option[Column],
                     f: (Column, Column) => Column,
                     persist: Boolean = true): DataFrame =
-    kHopStatsBuild(rels, k, hotThreshold, originPred, f, persist)._1
+    kHopStatsPlan(new SkewCore(rels, k, hotThreshold, originPred, persist), f)
 
   /** [[kHopStatsSkew]] with deterministic cache release — materialize the
     * result inside `fn` (same bracket contract as [[withKHopEdgesSkew]]). */
@@ -154,16 +154,6 @@ object KHop {
                           (fn: DataFrame => A): A = {
     val core = new SkewCore(rels, k, hotThreshold, originPred, persist = true)
     try fn(kHopStatsPlan(core, f)) finally core.release()
-  }
-
-  private[graft] def kHopStatsBuild(rels: DataFrame, k: Int,
-                                    hotThreshold: Long,
-                                    originPred: Option[Column],
-                                    f: (Column, Column) => Column,
-                                    persist: Boolean)
-      : (DataFrame, Seq[DataFrame]) = {
-    val core = new SkewCore(rels, k, hotThreshold, originPred, persist)
-    (kHopStatsPlan(core, f), core.cached)
   }
 
   /** Broadcast cap for the per-node origin-array table in the stats
@@ -228,8 +218,8 @@ object KHop {
   /** Shared skew-aware scaffolding for the k-hop builds: deduped edge set,
     * undirected adjacency, hot-key classification, and the k−1 hot/cold
     * frontier-expansion loop producing the reach set. Extracted (round 11)
-    * so [[kHopStatsBuild]] reuses the exact frontier the materializing
-    * [[kHopSkewBuild]] runs, instead of duplicating it. All doc comments
+    * so [[kHopStatsSkew]] reuses the exact frontier the materializing
+    * [[kHopEdgesSkew]] runs, instead of duplicating it. All doc comments
     * on the mechanics live on the members below. */
   private[graft] final class SkewCore(rels: DataFrame, k: Int,
                                       hotThreshold: Long,
@@ -239,36 +229,22 @@ object KHop {
     require(hotThreshold >= 0, "hotThreshold must be >= 0")
     private val cachedBuf =
       scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def cached: List[DataFrame] = cachedBuf.toList
     def persistOn: Boolean = persist
     def maybePersist(df: DataFrame): DataFrame =
       if (persist) {
         cachedBuf += df
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       } else df
-    // r12 (ADVICE r11): the reach loop's per-round localCheckpoints were
-    // registered nowhere, so the brackets could not release them — in a
-    // long-lived 298-query session they lingered until driver GC. Each
-    // round's checkpoint RDD is tracked here and [[release]] frees the
-    // blocks alongside the persisted tables. The checkpoint itself is
-    // gated on `persist`: persist=false callers (tests, plan probes) now
-    // build a pure lazy plan again — no eager jobs at construction, and
-    // the captured logical plan shows the full loop body.
-    private val ckptRdds =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    private def roundCheckpoint(df: DataFrame): DataFrame =
-      if (!persist) df
-      else {
-        val c = df.localCheckpoint(true)
-        c.queryExecution.logical match {
-          case l: org.apache.spark.sql.execution.LogicalRDD => ckptRdds += l.rdd
-          case _ => ()
-        }
-        c
-      }
+    // The reach loop's per-round checkpoints are pinned on a [[Rounds]]
+    // tracker, so [[release]] frees their blocks alongside the persisted
+    // tables. The checkpoint is gated on `persist`: persist=false callers
+    // (tests, plan probes) build a pure lazy plan — no eager jobs at
+    // construction, and the captured logical plan shows the full loop
+    // body.
+    private val rounds = new Rounds
     def release(): Unit = {
       cachedBuf.foreach(_.unpersist(blocking = false))
-      ckptRdds.foreach(_.unpersist(blocking = false))
+      rounds.release()
     }
     // multi-edges collapse here instead of in the final distinct: every
     // downstream join shrinks and the output set is unchanged
@@ -316,8 +292,8 @@ object KHop {
         // persist is dropped along with its cache-lookup cost. Eagerness
         // costs nothing extra: the rounds are a sequential frontier
         // anyway (each distinct consumes the previous one fully).
-        // (r12: gated on persist and release-tracked — see roundCheckpoint.)
-        val rc = roundCheckpoint(r)
+        // (r12: gated on persist and release-tracked — see `rounds`.)
+        val rc = if (persist) rounds.pin(r) else r
         // r12 opt (VERDICT r11 #3, guide §3.1): the materialized round's
         // exact row count is one cheap job over the checkpoint blocks —
         // while the whole round fits the frontier cap, broadcast the COLD
@@ -332,7 +308,7 @@ object KHop {
         // side is broadcast while it fits (else ordinary shuffle join).
         // hot: hub adjacency STREAMS against the broadcast hot reach rows.
         val expanded = adjCold
-          .join(GraphAlgos.hintIfSmall(reachCold, rcN),
+          .join(Rounds.hintIfSmall(reachCold, rcN),
             col("node") === col("a"))
           .select(col("origin"), col("b").as("node"))
           .union(adjHot.join(broadcast(reachHot), col("a") === col("node"))
@@ -343,13 +319,6 @@ object KHop {
       }
       r
     }
-  }
-
-  private[graft] def kHopSkewBuild(rels: DataFrame, k: Int, hotThreshold: Long,
-                                   originPred: Option[Column], persist: Boolean)
-      : (DataFrame, Seq[DataFrame]) = {
-    val core = new SkewCore(rels, k, hotThreshold, originPred, persist)
-    (kHopSkewPlan(core), core.cached)
   }
 
   private def kHopSkewPlan(core: SkewCore): DataFrame = {
@@ -488,7 +457,7 @@ object KHop {
       .where(col("deg") > hotThreshold)
       .select(col("node"))
     // classify edges by hot endpoints — two broadcast joins, zero shuffle.
-    // MARK ONCE, THEN FILTER (r11 opt — the kHopSkewBuild lesson applied
+    // MARK ONCE, THEN FILTER (r11 opt — the kHopEdgesSkew lesson applied
     // here too): flagged has THREE consumers (eCold once, eHot via both
     // incidence joins), so unpersisted it re-ran the classification scan
     // per consumer (profiler: a run of repeated 32-task stages re-reading

@@ -40,22 +40,25 @@ object TpchGraph {
     * ~2000 such jobs across one bench run. The memo holds METADATA only
     * (a StructType derived from the file footer, the thing a catalog
     * would hold); every query still scans the parquet data itself
-    * fresh. Keyed by path + the nanosAsLong flag, since that session
-    * flag changes how int64-nanos columns surface in the inferred
-    * schema. */
+    * fresh. Keyed by path, mtime + size (below) and the nanosAsLong
+    * flag, since that session flag changes how int64-nanos columns
+    * surface in the inferred schema. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    // r12 (ADVICE r11): fold the file's mtime+size into the key so a
-    // parquet regenerated in-place within one JVM (testdata rebuild, SF
-    // switch reusing a dir) can never silently read through a stale
-    // schema — the memo entry just misses and re-infers. One local stat
-    // call; directories (multi-file tables) stat the dir, whose mtime
-    // changes on any file add/replace.
+    // Fold mtime+size into the key so a parquet regenerated in place
+    // within one JVM (testdata rebuild, SF switch reusing a dir) misses
+    // the memo and re-infers instead of reading through a stale schema.
+    // A directory's own mtime changes only when an entry is added,
+    // removed or renamed — an in-place overwrite of a part file leaves it
+    // unchanged — so a multi-file table keys on the newest mtime and the
+    // total length of its files (one listing).
     val f = new java.io.File(path)
-    val key = path + "|" + f.lastModified + "|" + f.length + "|nanos=" +
+    val files = f +: Option(f.listFiles).toSeq.flatMap(_.toSeq)
+    val key = path + "|" + files.map(_.lastModified).max + "|" +
+      files.map(_.length).sum + "|nanos=" +
       spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     val schema = schemaCache.computeIfAbsent(key,
       _ => spark.read.parquet(path).schema)

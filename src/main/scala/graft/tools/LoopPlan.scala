@@ -8,10 +8,13 @@ import org.apache.spark.sql.DataFrame
   * operators localCheckpoint per round, so a whole-query `explain` shows
   * only a `Scan ExistingRDD` stub — the claimed per-round join strategy
   * (e.g. the conditional frontier broadcast) never appears in a committed
-  * plan. Each loop calls [[dump]] on its round's join plan BEFORE the
-  * checkpoint; the call is a no-op (one Option check, no Spark work)
-  * unless `-Dgraft.loopplan.dir=...` or `SPARK_GRAFT_LOOPPLAN_DIR` is
-  * set, so the bench/verify paths are untouched. Only the FIRST round per
+  * plan. The round driver ([[graft.operators.Rounds.pin]]) calls
+  * [[dump]] on a loop's round plan BEFORE the checkpoint, under the
+  * loop's tag; the k-hop reach rounds, whose persist=false plans are
+  * never checkpointed, call it directly. The call is a no-op (one Option
+  * check, no Spark work) unless `-Dgraft.loopplan.dir=...` or
+  * `SPARK_GRAFT_LOOPPLAN_DIR` is set, so the bench/verify paths are
+  * untouched. Only the FIRST round per
   * tag is written (the later rounds share the shape, only sizes shrink).
   *
   * Drive it with [[LoopPlanDump]].

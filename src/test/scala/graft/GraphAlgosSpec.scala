@@ -786,4 +786,54 @@ class GraphAlgosSpec extends AnyFunSuite {
       assert(t.contains(a) || t.contains(b), s"augmenting edge ($a,$b)")
     }
   }
+
+  test("loop operators release every checkpoint their result does not read") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    // triangle 1-2-3 with tail 3-4: as typed rels, weighted and a<b edges
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
+    val g = pairs.map { case (a, b) => (a, b, "E") }
+      .toDF("START_ID", "END_ID", "TYPE")
+    val e = pairs.toDF("src", "dst").withColumn("w", lit(1L))
+    val ab = pairs.toDF("a", "b")
+    val seeds = col("id") === 1L || col("id") === 4L
+    val E = Seq("E")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "pageRank" -> (() => GraphAlgos.pageRank(g, E, iters = 2)),
+      "pageRankWeighted" -> (() => GraphAlgos.pageRankWeighted(e, iters = 2)),
+      "labelPropagation" -> (() => GraphAlgos.labelPropagation(g, E, 2)),
+      "fastRP" -> (() => GraphAlgos.fastRP(g, E, dim = 2, iters = 2)),
+      "louvainMove" -> (() => GraphAlgos.louvainMove(g, E, rounds = 2)),
+      "eigenvectorCentrality" ->
+        (() => GraphAlgos.eigenvectorCentrality(g, E, iters = 2)),
+      "dagLevels" -> (() => GraphAlgos.dagLevels(e, rounds = 3)),
+      "sssp" -> (() => GraphAlgos.sssp(e, source = 1L, rounds = 3)),
+      "sccColoring" -> (() => GraphAlgos.sccColoring(e, rounds = 3)),
+      "bfsHops" -> (() => GraphAlgos.bfsHops(g, E, 1L, maxHops = 3)),
+      "kCore" -> (() => GraphAlgos.kCore(g, E, k = 2, rounds = 3)),
+      "kTruss" -> (() => GraphAlgos.kTruss(ab, k = 3, rounds = 2)),
+      "hits" -> (() => GraphAlgos.hits(g, E, iters = 2)),
+      "harmonicCentrality" ->
+        (() => GraphAlgos.harmonicCentrality(g, E, seeds, maxHops = 3)),
+      "closenessCentrality" ->
+        (() => GraphAlgos.closenessCentrality(g, E, seeds, maxHops = 3)),
+      "betweenness" -> (() => GraphAlgos.betweenness(g, E, seeds, 3)),
+      "randomWalks" -> (() => GraphAlgos.randomWalks(g, E, 2, length = 3)),
+      "node2vecWalks" -> (() => GraphAlgos.node2vecWalks(g, E, starts = 2,
+        length = 3, wReturn = 2L, wStay = 8L, wFar = 4L)),
+      "misLuby" -> (() => GraphAlgos.misLuby(g, E, rounds = 3)),
+      "hyperBall" -> (() => GraphAlgos.hyperBall(g, E, hops = 2)),
+      "jpColoring" -> (() => GraphAlgos.jpColoring(g, E, rounds = 3)),
+      "maximalMatching" -> (() => GraphAlgos.maximalMatching(ab, rounds = 3)))
+    val sc = spark.sparkContext
+    for ((name, op) <- ops) {
+      val before = sc.getPersistentRDDs.keySet
+      val df = op()
+      assert(df.count() > 0, name)
+      val added = sc.getPersistentRDDs.keySet -- before
+      val leaves = df.queryExecution.logical
+        .collect { case l: LogicalRDD => l.rdd.id }.toSet
+      assert(leaves.nonEmpty && added == leaves, name)
+    }
+  }
 }

@@ -152,18 +152,11 @@ class KHopSpec extends AnyFunSuite {
 
   test("skew builds expose cache handles that release cleanly") {
     import org.apache.spark.storage.StorageLevel
-    // build lazily, one at a time: the two builds cache canonically
-    // identical plans (CacheManager dedups them), so eager construction
-    // would let the first unpersist clear the second's entries
-    for (build <- Seq(
-        () => KHop.twoHopSkewBuild(rels, 2L, None, persist = true),
-        () => KHop.kHopSkewBuild(rels, 3, 2L, None, persist = true))) {
-      val (df, cached) = build()
-      df.count()
-      assert(cached.nonEmpty && cached.forall(_.storageLevel.useMemory))
-      cached.foreach(_.unpersist(blocking = true))
-      assert(cached.forall(_.storageLevel == StorageLevel.NONE))
-    }
+    val (df, cached) = KHop.twoHopSkewBuild(rels, 2L, None, persist = true)
+    df.count()
+    assert(cached.nonEmpty && cached.forall(_.storageLevel.useMemory))
+    cached.foreach(_.unpersist(blocking = true))
+    assert(cached.forall(_.storageLevel == StorageLevel.NONE))
   }
 
   test("with-brackets compute the right set and release their caches") {
@@ -173,18 +166,27 @@ class KHopSpec extends AnyFunSuite {
     // table — concurrency-safe, unlike counting the session's RDDs
     def eProbe = rels
       .select(col("START_ID").as("src"), col("END_ID").as("dst")).distinct()
+    // the k≥3 bracket also pins its reach rounds; every RDD id a bracket
+    // persists (caches and round checkpoints) must be gone after it
+    val sc = spark.sparkContext
+    def added(before: Set[Int]) = sc.getPersistentRDDs.keySet -- before
+    var before = sc.getPersistentRDDs.keySet.toSet
     val r1 = KHop.withTwoHopEdgesSkew(rels, hotThreshold = 2) { df =>
       assert(eProbe.storageLevel.useMemory)     // cache live inside
       df.as[(Long, Long, Long)].collect().toSet
     }
     assert(r1 == KHop.twoHopEdges(rels).as[(Long, Long, Long)].collect().toSet)
     assert(eProbe.storageLevel == StorageLevel.NONE, "twoHop bracket leaked")
+    assert(added(before).isEmpty, "twoHop bracket left RDDs persisted")
+    before = sc.getPersistentRDDs.keySet.toSet
     val r2 = KHop.withKHopEdgesSkew(rels, 3, hotThreshold = 2) { df =>
       assert(eProbe.storageLevel.useMemory)
+      assert(added(before).nonEmpty)            // caches + round pins
       df.as[(Long, Long, Long)].collect().toSet
     }
     assert(r2 == KHop.kHopEdges(rels, 3).as[(Long, Long, Long)].collect().toSet)
     assert(eProbe.storageLevel == StorageLevel.NONE, "kHop bracket leaked")
+    assert(added(before).isEmpty, "kHop bracket left RDDs persisted")
   }
 
   test("SparkEntry khop skew gates run bracketed and leak no cache") {

@@ -6,11 +6,15 @@ count via SPARK_GRAFT_SHUFFLE_PARTITIONS), so the low-core run executes the
 same task graph and the ratio measures CPU scaling, not task sizing.
 
 Writes scaling_r12.json: per query, seconds at 8 and 32 cores and the
-speedup, plus the run configuration.
+speedup, plus the run configuration. Restores the committed
+bench_full.json afterwards (graft.Bench overwrites it per run).
 
 Usage: python3 tools/scaling_r12.py [blowup] [runs]
 """
 import json, os, subprocess, sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BF = os.path.join(REPO, "bench_full.json")
 
 BLOWUP = sys.argv[1] if len(sys.argv) > 1 else "4"
 RUNS = sys.argv[2] if len(sys.argv) > 2 else "2"
@@ -28,14 +32,18 @@ def bench(cpus):
                SPARK_GRAFT_BLOWUP=BLOWUP,
                SPARK_GRAFT_BENCH_ONLY=QUERIES,
                SPARK_GRAFT_BENCH_RUNS=RUNS)
-    subprocess.run(["sbt", "-batch", "runMain graft.Bench"], env=env,
-                   check=True, stdout=subprocess.DEVNULL,
+    subprocess.run(["sbt", "-batch", "runMain graft.Bench"], cwd=REPO,
+                   env=env, check=True, stdout=subprocess.DEVNULL,
                    stderr=subprocess.DEVNULL)
-    with open("bench_full.json") as f:
+    with open(BF) as f:
         return json.load(f)["queries"]
 
-t32 = bench(32)
-t8 = bench(8)
+saved = open(BF).read()
+try:
+    t32 = bench(32)
+    t8 = bench(8)
+finally:
+    open(BF, "w").write(saved)
 out = {
     "config": {"blowup": int(BLOWUP), "sf": "/root/testdata/sf0.1",
                "shuffle_partitions": int(PARTS), "runs_min_of": int(RUNS),
@@ -50,6 +58,6 @@ for q in sorted(t32):
         "sec_8cpu": s8, "sec_32cpu": s32,
         "speedup_32_over_8": round(s8 / s32, 2) if s8 and s32 else None,
     }
-with open("scaling_r12.json", "w") as f:
+with open(os.path.join(REPO, "scaling_r12.json"), "w") as f:
     json.dump(out, f, indent=1, sort_keys=True)
 print(json.dumps(out, indent=1, sort_keys=True))
