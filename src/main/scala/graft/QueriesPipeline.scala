@@ -653,7 +653,7 @@ object QueriesPipeline {
       // persisted: the filtered+deduped corpus feeds the shingle index
       // (consumed by counts, the DF cap, and both self-join sides) AND
       // the final survivor anti-join — unpersisted it re-executes the
-      // scan+dedup subtree per consumer (the twoHopEdgesSkew lesson)
+      // scan+dedup subtree per consumer (the withTwoHopEdgesSkew lesson)
       val kept = q.join(keepExact.select(col("doc_id")), "doc_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val pairs = Dedup.ngramJaccard(kept, "doc_id", "text",

@@ -277,7 +277,7 @@ object SparkEntry {
     }),
     // §2.3 generalized k ON the dense subgraph — k=3 over the
     // part/supplier hubs, through the skew-split frontier build
-    // (kHopEdgesSkew): suppliers (~600-part fan-out) classify hot at
+    // (withKHopEdgesSkew): suppliers (~600-part fan-out) classify hot at
     // threshold 256, so their adjacency streams against the broadcast hot
     // reach rows in every frontier/incidence join instead of shuffling to
     // one reducer. Origins thinned via % 500 < 20: 20 qualifying suppliers
@@ -286,7 +286,7 @@ object SparkEntry {
     // orders, so output ≈ origins × |E| is the operator's INHERENT
     // complexity and the thinning keeps the bench proportionate.
     // r11 OPT: the gate's aggregate is PUSHED THROUGH the incidence step
-    // (KHop.kHopStatsSkew — inclusion–exclusion over per-node origin
+    // (KHop.withKHopStatsSkew — inclusion–exclusion over per-node origin
     // arrays): same (origin, n_edges, checksum) rows, same skew-aware
     // frontier, but the ~origins×|E| incidence set is never materialized
     // or globally deduplicated (the old plan's 287 MB exchange + distinct
@@ -303,7 +303,7 @@ object SparkEntry {
     }),
     // r12 (VERDICT r11 #8): the khop_3_dense gate rides the stats
     // pushdown, so without this gate no bench-scale path would exercise
-    // the MATERIALIZING k≥3 skew build (kHopEdgesSkew) — a regression
+    // the MATERIALIZING k≥3 skew build (withKHopEdgesSkew) — a regression
     // there would only be felt by the toy-scale KHopSpec equivalence
     // property. This gate runs it on the FROM_NATION+IN_REGION graph
     // with hotThreshold=2: nations/regions (fan-in ≥5 at every SF)

@@ -66,13 +66,13 @@ object KHop {
   }
 
   /** Skew-aware generalized k-hop: the [[kHopEdges]] semantics with the
-    * 2-hop hot/cold supernode split ([[twoHopEdgesSkew]], the reference's
-    * SuperNodeCache scenario — KHOP.md:159-185) applied to EVERY join that
-    * keys on a node id: the k-1 frontier-expansion joins and the two final
-    * incidence joins. At k≥3 a hub is hit twice over — its fan-out both
-    * explodes a frontier step and skews the incidence join — and AQE alone
-    * only rebalances partitions after the skewed shuffle has already moved
-    * the hub's adjacency to one reducer.
+    * 2-hop hot/cold supernode split ([[withTwoHopEdgesSkew]], the
+    * reference's SuperNodeCache scenario — KHOP.md:159-185) applied to
+    * EVERY join that keys on a node id: the k-1 frontier-expansion joins
+    * and the two final incidence joins. At k≥3 a hub is hit twice over —
+    * its fan-out both explodes a frontier step and skews the incidence
+    * join — and AQE alone only rebalances partitions after the skewed
+    * shuffle has already moved the hub's adjacency to one reducer.
     *
     * The split: hub-ness is the adjacency fan-out (a degree count,
     * broadcast as a small hot-key set). Each join is then two joins —
@@ -87,32 +87,23 @@ object KHop {
     * The two classes partition the rows of each join, so unions need no
     * cross-class dedup beyond the semantics' own distincts.
     *
-    * Like [[twoHopEdgesSkew]], the shared scan/dedup inputs are persisted
-    * (every frontier step and both incidence joins re-read them); use
-    * [[withKHopEdgesSkew]] to release the caches deterministically in a
-    * long-lived session.
-    */
-  def kHopEdgesSkew(rels: DataFrame, k: Int, hotThreshold: Long,
-                    originPred: Option[Column] = None,
-                    persist: Boolean = true): DataFrame =
-    kHopSkewPlan(new SkewCore(rels, k, hotThreshold, originPred, persist))
-
-  /** [[kHopEdgesSkew]] with deterministic cache release: runs `f` on the
-    * result, then unpersists every table the build cached. Materialize the
-    * result inside `f` — the DataFrame is lazy, so plans executed after the
+    * Release bracket: the shared scan/dedup inputs are persisted (every
+    * frontier step and both incidence joins re-read them) and the reach
+    * rounds are checkpointed; `f` runs on the result, then every cache
+    * and checkpoint the build made is released. Materialize the result
+    * inside `f` — the DataFrame is lazy, so plans executed after the
     * bracket recompute the cached inputs from source. */
   def withKHopEdgesSkew[A](rels: DataFrame, k: Int, hotThreshold: Long,
                            originPred: Option[Column] = None)
-                          (f: DataFrame => A): A = {
-    val core = new SkewCore(rels, k, hotThreshold, originPred, persist = true)
-    try f(kHopSkewPlan(core)) finally core.release()
-  }
+                          (f: DataFrame => A): A =
+    bracket(r => kHopSkewPlan(
+      new SkewCore(rels, k, hotThreshold, originPred, r)))(f)
 
-  /** Aggregate-pushdown twin of [[kHopEdgesSkew]] (optimization round 11,
-    * guide §1.2 "don't compute things you throw away"): when the consumer
-    * only needs per-origin COUNT and an edge-checksum SUM over the k-hop
-    * incidence set, the set itself never has to be materialized or
-    * globally deduplicated. With A(o) = {e : src ∈ R(o)}, B(o) = {e :
+  /** Aggregate-pushdown twin of [[withKHopEdgesSkew]] (optimization round
+    * 11, guide §1.2 "don't compute things you throw away"): when the
+    * consumer only needs per-origin COUNT and an edge-checksum SUM over
+    * the k-hop incidence set, the set itself never has to be materialized
+    * or globally deduplicated. With A(o) = {e : src ∈ R(o)}, B(o) = {e :
     * dst ∈ R(o)} over the distinct edge set E and reach R(o):
     *
     *   |S(o)|  = |A| + |B| − |A∩B|      (inclusion–exclusion; E distinct
@@ -131,29 +122,31 @@ object KHop {
     * khop_3_dense at sf0.1: a 287 MB exchange + 105 s of distinct CPU).
     *
     * The reach R is built by the same hot/cold skew frontier as
-    * [[kHopEdgesSkew]]. Overflow note: per-origin Σf(A)+Σf(B) ≤ 2× the
-    * materializing plan's checksum magnitude — the mod-100003 checksum
-    * terms the dense gates use keep that far inside int64 (≤ ~1e17 at a
-    * 10× blowup).
+    * [[withKHopEdgesSkew]]. Overflow note: per-origin Σf(A)+Σf(B) ≤ 2×
+    * the materializing plan's checksum magnitude — the mod-100003
+    * checksum terms the dense gates use keep that far inside int64 (≤
+    * ~1e17 at a 10× blowup).
     *
-    * Returns (origin, n_edges, checksum) — bit-identical to
-    * `kHopEdgesSkew(...).groupBy(origin).agg(count(1), sum(f(src,dst)))`
-    * (KHopSpec pins the equivalence; the khop_3_dense oracle gate pins it
-    * against DuckDB at all SFs). */
-  def kHopStatsSkew(rels: DataFrame, k: Int, hotThreshold: Long,
-                    originPred: Option[Column],
-                    f: (Column, Column) => Column,
-                    persist: Boolean = true): DataFrame =
-    kHopStatsPlan(new SkewCore(rels, k, hotThreshold, originPred, persist), f)
-
-  /** [[kHopStatsSkew]] with deterministic cache release — materialize the
-    * result inside `fn` (same bracket contract as [[withKHopEdgesSkew]]). */
+    * `fn` receives (origin, n_edges, checksum) — bit-identical to the
+    * materializing build aggregated by
+    * `groupBy(origin).agg(count(1), sum(f(src,dst)))` (KHopSpec pins the
+    * equivalence; the khop_3_dense oracle gate pins it against DuckDB at
+    * all SFs). Same release bracket as [[withKHopEdgesSkew]]: materialize
+    * the result inside `fn`. */
   def withKHopStatsSkew[A](rels: DataFrame, k: Int, hotThreshold: Long,
                            originPred: Option[Column],
                            f: (Column, Column) => Column)
-                          (fn: DataFrame => A): A = {
-    val core = new SkewCore(rels, k, hotThreshold, originPred, persist = true)
-    try fn(kHopStatsPlan(core, f)) finally core.release()
+                          (fn: DataFrame => A): A =
+    bracket(r => kHopStatsPlan(
+      new SkewCore(rels, k, hotThreshold, originPred, r), f))(fn)
+
+  /** The release bracket shared by the skew builds: `build` caches and
+    * checkpoints on a fresh [[Rounds]] tracker, `f` runs on the plan it
+    * returns, and every table and checkpoint it tracked is released
+    * afterwards (also when `build` or `f` throws). */
+  private def bracket[A](build: Rounds => DataFrame)(f: DataFrame => A): A = {
+    val rounds = new Rounds
+    try f(build(rounds)) finally rounds.release()
   }
 
   /** Broadcast cap for the per-node origin-array table in the stats
@@ -176,19 +169,17 @@ object KHop {
     // consumers below (two term joins + both endpoints of the A∩B join)
     // would otherwise re-run the collect_set shuffle four times
     // (measured: 4 × 48-task stages, ~60 s of the query's CPU).
-    val os0 = core.maybePersist(
+    val os0 = core.rounds.persist(
       reach.groupBy(col("node")).agg(collect_set(col("origin")).as("os")))
     // r12 opt (guide §3.1): when the origin-array table is small, hint it
     // broadcast — its four consumers then join map-side and the persisted
     // edge table streams with NO exchange (before: each term join
     // shuffled e by node). Size measured exactly (one aggregate over the
     // cached table, which also warms it for every consumer).
-    val os = if (core.persistOn) {
-      val row = os0.agg(count(lit(1)), sum(size(col("os")))).head()
-      val bytes = row.getLong(0) * 24L +
-        (if (row.isNullAt(1)) 0L else row.getLong(1)) * 8L
-      if (bytes <= OsBroadcastMaxBytes) broadcast(os0) else os0
-    } else os0
+    val osRow = os0.agg(count(lit(1)), sum(size(col("os")))).head()
+    val osBytes = osRow.getLong(0) * 24L +
+      (if (osRow.isNullAt(1)) 0L else osRow.getLong(1)) * 8L
+    val os = if (osBytes <= OsBroadcastMaxBytes) broadcast(os0) else os0
     // per-node incident-edge aggregates (1 row per node and side)
     val srcAgg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("c"), sum(fe).as("fs"))
@@ -209,8 +200,8 @@ object KHop {
     val stats = term(srcAgg).union(term(dstAgg)).union(both)
       .groupBy(col("origin"))
       .agg(sum(col("c")).as("n_edges"), sum(col("fs")).as("checksum"))
-    // plan evidence under the REAL bracket config (persist=true, os
-    // broadcast decided from measured size) — no-op unless LoopPlan is on
+    // plan evidence with the os broadcast decided from measured size —
+    // no-op unless LoopPlan is on
     graft.tools.LoopPlan.dump("khop_stats_plan", stats)
     stats
   }
@@ -218,40 +209,22 @@ object KHop {
   /** Shared skew-aware scaffolding for the k-hop builds: deduped edge set,
     * undirected adjacency, hot-key classification, and the k−1 hot/cold
     * frontier-expansion loop producing the reach set. Extracted (round 11)
-    * so [[kHopStatsSkew]] reuses the exact frontier the materializing
-    * [[kHopEdgesSkew]] runs, instead of duplicating it. All doc comments
-    * on the mechanics live on the members below. */
-  private[graft] final class SkewCore(rels: DataFrame, k: Int,
-                                      hotThreshold: Long,
-                                      originPred: Option[Column],
-                                      persist: Boolean) {
+    * so [[withKHopStatsSkew]] reuses the exact frontier the materializing
+    * [[withKHopEdgesSkew]] runs, instead of duplicating it. Its persisted
+    * tables and reach-round checkpoints are tracked on `rounds`, which
+    * the bracket releases. All doc comments on the mechanics live on the
+    * members below. */
+  private final class SkewCore(rels: DataFrame, k: Int, hotThreshold: Long,
+                               originPred: Option[Column],
+                               val rounds: Rounds) {
     require(k >= 1, "k must be >= 1")
     require(hotThreshold >= 0, "hotThreshold must be >= 0")
-    private val cachedBuf =
-      scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def persistOn: Boolean = persist
-    def maybePersist(df: DataFrame): DataFrame =
-      if (persist) {
-        cachedBuf += df
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else df
-    // The reach loop's per-round checkpoints are pinned on a [[Rounds]]
-    // tracker, so [[release]] frees their blocks alongside the persisted
-    // tables. The checkpoint is gated on `persist`: persist=false callers
-    // (tests, plan probes) build a pure lazy plan — no eager jobs at
-    // construction, and the captured logical plan shows the full loop
-    // body.
-    private val rounds = new Rounds
-    def release(): Unit = {
-      cachedBuf.foreach(_.unpersist(blocking = false))
-      rounds.release()
-    }
     // multi-edges collapse here instead of in the final distinct: every
     // downstream join shrinks and the output set is unchanged
-    val e: DataFrame = maybePersist(
+    val e: DataFrame = rounds.persist(
       rels.select(col("START_ID").as("src"), col("END_ID").as("dst"))
         .distinct())
-    val adj: DataFrame = maybePersist(
+    val adj: DataFrame = rounds.persist(
       e.union(e.select(col("dst"), col("src"))).distinct().toDF("a", "b"))
     // hot = adjacency fan-out above threshold; the set is small by
     // definition, so classification is a broadcast join — no shuffle
@@ -272,11 +245,11 @@ object KHop {
     // marked once, persisted, and both branches filter the materialized
     // rows. e carries both endpoint flags in ONE marked table.
     // (lazy: the stats path never touches the marked tables)
-    private val adjM = maybePersist(mark(adj, "a", "_hot_a"))
+    private val adjM = rounds.persist(mark(adj, "a", "_hot_a"))
     val adjCold: DataFrame = adjM.where(col("_hot_a").isNull).drop("_hot_a")
     val adjHot: DataFrame = adjM.where(col("_hot_a").isNotNull).drop("_hot_a")
     lazy val eM: DataFrame =
-      maybePersist(mark(mark(e, "src", "_hot_s"), "dst", "_hot_d"))
+      rounds.persist(mark(mark(e, "src", "_hot_s"), "dst", "_hot_d"))
     val reach: DataFrame = {
       val allOrigins = adj.select(col("a").as("origin")).distinct()
       val origins = originPred.fold(allOrigins)(p => allOrigins.where(p))
@@ -292,15 +265,14 @@ object KHop {
         // persist is dropped along with its cache-lookup cost. Eagerness
         // costs nothing extra: the rounds are a sequential frontier
         // anyway (each distinct consumes the previous one fully).
-        // (r12: gated on persist and release-tracked — see `rounds`.)
-        val rc = if (persist) rounds.pin(r) else r
+        val rc = rounds.pin(r)
         // r12 opt (VERDICT r11 #3, guide §3.1): the materialized round's
         // exact row count is one cheap job over the checkpoint blocks —
         // while the whole round fits the frontier cap, broadcast the COLD
         // reach side too, so the (large, persisted) cold adjacency streams
         // map-side instead of both sides shuffling every round. Same cap
         // and rationale as the delta loops (GraphAlgos broadcast gates).
-        val rcN = if (persist) rc.count() else Long.MaxValue
+        val rcN = rc.count()
         val rM = mark(rc, "node", "_hot_n")
         val reachCold = rM.where(col("_hot_n").isNull).drop("_hot_n")
         val reachHot = rM.where(col("_hot_n").isNotNull).drop("_hot_n")
@@ -322,7 +294,7 @@ object KHop {
   }
 
   private def kHopSkewPlan(core: SkewCore): DataFrame = {
-    val reachM = core.maybePersist(core.mark(core.reach, "node", "_hot_n"))
+    val reachM = core.rounds.persist(core.mark(core.reach, "node", "_hot_n"))
     val reachCold = reachM.where(col("_hot_n").isNull).drop("_hot_n")
     val reachHot = reachM.where(col("_hot_n").isNotNull).drop("_hot_n")
     def incidence(endpoint: String, flag: String): DataFrame = {
@@ -397,54 +369,29 @@ object KHop {
     * The two edge classes partition the edge set, so the union needs no
     * cross-class dedup.
     *
+    * Release bracket: `f` runs on the result, then every table the build
+    * cached is unpersisted — fire-and-forget persists would otherwise
+    * accumulate MEMORY_AND_DISK leftovers in a long-lived session until
+    * eviction. Materialize the result inside `f`: the DataFrame is lazy,
+    * so plans executed after the bracket recompute the cached inputs from
+    * source (correct, just unaccelerated).
+    *
     * @param originPred optional predicate over `origin` applied to the
     *   neighbor side BEFORE the per-edge join, so a bounded origin set
     *   shrinks every downstream operator (not just the output).
     */
-  def twoHopEdgesSkew(rels: DataFrame, hotThreshold: Long,
-                      originPred: Option[Column] = None,
-                      persist: Boolean = true): DataFrame =
-    twoHopSkewBuild(rels, hotThreshold, originPred, persist)._1
-
-  /** [[twoHopEdgesSkew]] with deterministic cache release: runs `f` on the
-    * result, then unpersists every table the build cached — the bracket for
-    * long-lived sessions, where fire-and-forget persists would otherwise
-    * accumulate MEMORY_AND_DISK leftovers until eviction. Materialize the
-    * result inside `f`: the DataFrame is lazy, so plans executed after the
-    * bracket recompute the cached inputs from source (correct, just
-    * unaccelerated). */
   def withTwoHopEdgesSkew[A](rels: DataFrame, hotThreshold: Long,
                              originPred: Option[Column] = None)
-                            (f: DataFrame => A): A = {
-    val (df, cached) = twoHopSkewBuild(rels, hotThreshold, originPred,
-      persist = true)
-    try f(df) finally cached.foreach(_.unpersist(blocking = false))
-  }
-
-  private[graft] def twoHopSkewBuild(rels: DataFrame, hotThreshold: Long,
-                                     originPred: Option[Column], persist: Boolean)
-      : (DataFrame, Seq[DataFrame]) = {
+                            (f: DataFrame => A): A = bracket { rounds =>
     // e and the neighbor table are each consumed by 4-5 downstream
     // branches (classification, cold arrays, two hot joins). Persist them
     // — the GraphX idiom for exactly this shape — or every branch re-runs
     // the source scan + dedup shuffle (measured: 78 parquet scans in the
-    // unpersisted plan, ~3× the runtime). MEMORY_AND_DISK: the deduped
-    // edge list is the operator's working set and spills rather than OOMs.
-    // OWNERSHIP: the cached tables live until the session evicts them (the
-    // returned plan is lazy, so this function cannot unpersist them
-    // itself). The build returns them so [[withTwoHopEdgesSkew]] can; bare
-    // [[twoHopEdgesSkew]] callers in a long-lived session should use the
-    // bracket, pass persist=false, or clear via spark.catalog.clearCache().
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def maybePersist(df: DataFrame): DataFrame =
-      if (persist) {
-        cached += df
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else df
-    val e = maybePersist(
+    // unpersisted plan, ~3× the runtime).
+    val e = rounds.persist(
       rels.select(col("START_ID").as("src"), col("END_ID").as("dst"))
         .distinct())
-    val nbFlat = maybePersist(
+    val nbFlat = rounds.persist(
       e.select(col("src").as("node"), col("dst").as("n"))
         .union(e.select(col("dst"), col("src")))
         .distinct())
@@ -457,13 +404,13 @@ object KHop {
       .where(col("deg") > hotThreshold)
       .select(col("node"))
     // classify edges by hot endpoints — two broadcast joins, zero shuffle.
-    // MARK ONCE, THEN FILTER (r11 opt — the kHopEdgesSkew lesson applied
+    // MARK ONCE, THEN FILTER (r11 opt — the k-hop skew build's lesson applied
     // here too): flagged has THREE consumers (eCold once, eHot via both
     // incidence joins), so unpersisted it re-ran the classification scan
     // per consumer (profiler: a run of repeated 32-task stages re-reading
     // the cached edge table).
     val hotMark = broadcast(hot.withColumn("_hot", lit(true)))
-    val flagged = maybePersist(e
+    val flagged = rounds.persist(e
       .join(hotMark.select(col("node").as("src"), col("_hot").as("hs")),
         Seq("src"), "left")
       .join(hotMark.select(col("node").as("dst"), col("_hot").as("hd")),
@@ -479,7 +426,7 @@ object KHop {
     val emptyArr = array().cast("array<bigint>")
     // persisted (bracket-released): the src- and dst-side joins below
     // would otherwise run this collect_set shuffle twice
-    val nbArrCold = maybePersist(
+    val nbArrCold = rounds.persist(
       nbo.join(broadcast(hot), Seq("node"), "left_anti")
         .groupBy(col("node")).agg(collect_set(col("origin")).as("nb")))
     val coldPart = eCold
@@ -501,8 +448,8 @@ object KHop {
     val hotPart = bySrc.select(col("origin"), col("src"), col("dst"))
       .union(byDst.select(col("origin"), col("src"), col("dst")))
       .distinct()
-    (coldPart.unionByName(hotPart), cached.toList)
-  }
+    coldPart.unionByName(hotPart)
+  }(f)
 
   /** Long-form 2-hop: one row per (origin, src, dst). */
   def twoHopEdges(rels: DataFrame): DataFrame = {

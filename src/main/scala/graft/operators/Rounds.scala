@@ -6,6 +6,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.storage.StorageLevel
 
 /** The round driver behind the iterative graph operators: one place owns
   * the per-round recipe of every loop.
@@ -18,16 +19,21 @@ import org.apache.spark.sql.functions.{broadcast, col}
   *  - [[fixed]] runs single-state fixed-round loops; [[delta]] runs the
   *    changed-frontier loops, whose frontier count is both the loop
   *    condition and the broadcast decision.
+  *  - [[persist]] caches a table that several consumers re-read
+  *    (MEMORY_AND_DISK) and tracks it the same way.
   *  - Release: `unpersist(blocking = false)` of each pinned RDD once
   *    nothing can read it — a fixed/delta round's predecessor as soon as
   *    the round is pinned, everything else when [[Rounds.run]] returns,
   *    except the RDDs its result reads (the result's `LogicalRDD` leaves).
   *    A checkpoint has no lineage to fall back on, so releasing one that
   *    a live plan reads would fail that plan; the leaf rule is exactly
-  *    what a returned plan can reach.
+  *    what a returned plan can reach. Persisted tables are always
+  *    released: a plan that reads one afterwards recomputes it from its
+  *    lineage.
   */
 final class Rounds private[operators] () {
   private val pinned = mutable.LinkedHashMap.empty[Int, RDD[_]]
+  private val cached = mutable.ListBuffer.empty[DataFrame]
 
   /** Eagerly checkpoints `df` and tracks it for release; `tag` names the
     * loop-body plan to dump before the checkpoint hides it. */
@@ -36,6 +42,13 @@ final class Rounds private[operators] () {
     val c = df.localCheckpoint(true)
     Rounds.leaves(c).foreach(r => pinned(r.id) = r)
     c
+  }
+
+  /** Persists `df` (MEMORY_AND_DISK: a working set spills rather than
+    * OOMs) and tracks it for release. */
+  def persist(df: DataFrame): DataFrame = {
+    cached += df
+    df.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** `n` rounds of `state = pin(step(state))`, releasing each pinned round
@@ -79,8 +92,10 @@ final class Rounds private[operators] () {
     state
   }
 
-  /** Releases every RDD pinned here that no DataFrame in `keep` reads. */
+  /** Releases every table persisted here and every RDD pinned here that
+    * no DataFrame in `keep` reads. */
   private[operators] def release(keep: DataFrame*): Unit = {
+    cached.foreach(_.unpersist(blocking = false))
     val live = keep.flatMap(Rounds.leaves).map(_.id).toSet
     pinned.keys.filterNot(live).toList.foreach(unpin)
   }

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{CompletableFuture, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors, ThreadFactory, TimeUnit}
 
 import scala.util.control.NonFatal
 
@@ -967,7 +967,7 @@ object FlightGrpc {
     // with TLS the H2 handlers install asynchronously after ALPN; RPCs
     // must not open stream channels before the codec is in the pipeline
     private val h2Ready = new CompletableFuture[Unit]()
-    private val ch: Channel = {
+    private val ch: Channel = try {
       val sslCtx = tls.map(Tls.clientContext)
       def installH2(p: io.netty.channel.ChannelPipeline): Unit = {
         p.addLast(Http2FrameCodecBuilder.forClient().build())
@@ -999,13 +999,26 @@ object FlightGrpc {
                   h2Ready.completeExceptionally(cause)
                   ctx.close(); ()
                 }
+                // a handshake error that is not an SSLException (e.g. an
+                // empty truststore's InvalidAlgorithmParameterException)
+                // lands here, not in handshakeFailure
+                override def exceptionCaught(ctx: ChannelHandlerContext,
+                                             cause: Throwable): Unit = {
+                  h2Ready.completeExceptionally(cause)
+                  super.exceptionCaught(ctx, cause)
+                }
               })
               ()
           }
         })
       val c = b.connect(host, port).sync().channel()
-      h2Ready.get(30, TimeUnit.SECONDS) // TLS handshake + ALPN barrier
+      try h2Ready.get(30, TimeUnit.SECONDS) // TLS handshake + ALPN barrier
+      catch { case e: ExecutionException => throw e.getCause }
       c
+    } catch {
+      case t: Throwable =>
+        group.shutdownGracefully(0, 200, TimeUnit.MILLISECONDS)
+        throw t
     }
 
     /** The ALPN-negotiated application protocol ("h2") — None on

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * Scale (100 TB): join state is partitioned by the equality key (the
   * mid node n), so hot hubs shard across partitions only by key — the
   * same supernode caveat as the batch path; mitigate upstream with the
-  * degree split of [[graft.operators.KHop.twoHopEdgesSkew]]. Edges are
+  * degree split of [[graft.operators.KHop.withTwoHopEdgesSkew]]. Edges are
   * facts (never late, never retracted here), so no watermark bounds the
   * state: retention IS the product — the operator maintains the full
   * 2-hop view for as long as it runs, like any materialized view. Output

@@ -10,12 +10,14 @@ import org.apache.spark.sql.DataFrame
   * (e.g. the conditional frontier broadcast) never appears in a committed
   * plan. The round driver ([[graft.operators.Rounds.pin]]) calls
   * [[dump]] on a loop's round plan BEFORE the checkpoint, under the
-  * loop's tag; the k-hop reach rounds, whose persist=false plans are
-  * never checkpointed, call it directly. The call is a no-op (one Option
-  * check, no Spark work) unless `-Dgraft.loopplan.dir=...` or
-  * `SPARK_GRAFT_LOOPPLAN_DIR` is set, so the bench/verify paths are
-  * untouched. Only the FIRST round per
-  * tag is written (the later rounds share the shape, only sizes shrink).
+  * loop's tag. The k-hop skew builds call it directly: a reach round is
+  * pinned only when the next round starts and the last one never is
+  * (the incidence or stats plan reads it), so a pin tag would name the
+  * wrong round; their final plans are never pinned at all. The call is
+  * a no-op (one Option check, no Spark work) unless
+  * `-Dgraft.loopplan.dir=...` or `SPARK_GRAFT_LOOPPLAN_DIR` is set, so
+  * the bench/verify paths are untouched. Only the FIRST round per tag is
+  * written (the later rounds share the shape, only sizes shrink).
   *
   * Drive it with [[LoopPlanDump]].
   */

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.TimeoutException
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -94,11 +95,19 @@ class FlightTlsSpec extends AnyFunSuite {
       ks.load(null, pass.toCharArray)
       val out = Files.newOutputStream(empty)
       try ks.store(out, pass.toCharArray) finally out.close()
-      intercept[Exception] {
+      val t0 = System.nanoTime()
+      val err = intercept[Exception] {
         val c = new FlightGrpc.Client("127.0.0.1", srv.port, "sekrit",
           tls = Some(FlightGrpc.Tls.ClientTls(empty.toString, pass)))
         c.close()
       }
+      val secs = (System.nanoTime() - t0) / 1e9
+      // the handshake error itself surfaces, not the ALPN barrier's timeout
+      assert(secs < 5.0, s"handshake failure took $secs s")
+      val chain = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).toList
+      assert(!chain.exists(_.isInstanceOf[TimeoutException]),
+        s"timed out instead of reporting the cause: $chain")
       ()
     }
   }

@@ -57,8 +57,8 @@ class KHopSpec extends AnyFunSuite {
     // threshold 100: every node cold → pure CSR path;
     // threshold 2: node 0 and 1 (degree 4) hot, rest cold → genuine split
     for (t <- Seq(0L, 2L, 100L)) {
-      val got = KHop.twoHopEdgesSkew(rels, hotThreshold = t)
-        .as[(Long, Long, Long)].collect().toSet
+      val got = KHop.withTwoHopEdgesSkew(rels, hotThreshold = t)(
+        _.as[(Long, Long, Long)].collect().toSet)
       assert(got == want, s"threshold $t")
     }
   }
@@ -68,15 +68,15 @@ class KHopSpec extends AnyFunSuite {
     val want = KHop.twoHopEdges(rels).where(col("origin") <= 1)
       .as[(Long, Long, Long)].collect().toSet
     for (t <- Seq(0L, 2L, 100L)) {
-      val got = KHop.twoHopEdgesSkew(rels, hotThreshold = t, originPred = pred)
-        .as[(Long, Long, Long)].collect().toSet
+      val got = KHop.withTwoHopEdgesSkew(rels, hotThreshold = t,
+          originPred = pred)(_.as[(Long, Long, Long)].collect().toSet)
       assert(got == want, s"threshold $t")
     }
   }
 
   test("skew-split classifies edges via a broadcast of the hot-key set") {
-    val plan = KHop.twoHopEdgesSkew(rels, hotThreshold = 2)
-      .queryExecution.executedPlan.toString
+    val plan = KHop.withTwoHopEdgesSkew(rels, hotThreshold = 2)(
+      _.queryExecution.executedPlan.toString)
     assert(plan.contains("BroadcastHashJoin"), s"no broadcast in:\n$plan")
   }
 
@@ -92,9 +92,8 @@ class KHopSpec extends AnyFunSuite {
         for (k <- Seq(2, 3); t <- Seq(0L, 2L, 100L)) {
           val want = KHop.kHopEdges(df, k)
             .as[(Long, Long, Long)].collect().toSet
-          val got = KHop.kHopEdgesSkew(df, k, hotThreshold = t,
-              persist = false)
-            .as[(Long, Long, Long)].collect().toSet
+          val got = KHop.withKHopEdgesSkew(df, k, hotThreshold = t)(
+            _.as[(Long, Long, Long)].collect().toSet)
           assert(got == want, s"k=$k threshold=$t edges=$es")
         }
       }
@@ -102,7 +101,7 @@ class KHopSpec extends AnyFunSuite {
   }
 
   test("stats pushdown equals edges+aggregate at every k and threshold") {
-    // kHopStatsSkew must be BIT-identical to aggregating the materialized
+    // withKHopStatsSkew must be BIT-identical to aggregating the materialized
     // incidence set — the khop_3_dense gate rides on this equivalence
     val f = (src: Column, dst: Column) =>
       (src % 100003L) * 100003L + (dst % 100003L)
@@ -117,15 +116,16 @@ class KHopSpec extends AnyFunSuite {
         val pred =
           if (trial % 2 == 0) Some(col("origin") % 2 === 0) else None
         for (k <- Seq(1, 2, 3); t <- Seq(0L, 2L, 100L)) {
-          val want = KHop.kHopEdgesSkew(df, k, hotThreshold = t,
-              originPred = pred, persist = false)
-            .groupBy(col("origin"))
-            .agg(count(lit(1)).as("n_edges"),
-              sum(f(col("src"), col("dst"))).as("checksum"))
-            .as[(Long, Long, Long)].collect().toSet
-          val got = KHop.kHopStatsSkew(df, k, hotThreshold = t,
-              originPred = pred, f = f, persist = false)
-            .as[(Long, Long, Long)].collect().toSet
+          val want = KHop.withKHopEdgesSkew(df, k, hotThreshold = t,
+              originPred = pred) {
+            _.groupBy(col("origin"))
+              .agg(count(lit(1)).as("n_edges"),
+                sum(f(col("src"), col("dst"))).as("checksum"))
+              .as[(Long, Long, Long)].collect().toSet
+          }
+          val got = KHop.withKHopStatsSkew(df, k, hotThreshold = t,
+              originPred = pred, f = f)(
+            _.as[(Long, Long, Long)].collect().toSet)
           assert(got == want, s"k=$k threshold=$t edges=$es pred=$pred")
         }
       }
@@ -137,26 +137,16 @@ class KHopSpec extends AnyFunSuite {
     val want = KHop.kHopEdges(rels, 3, originPred = pred)
       .as[(Long, Long, Long)].collect().toSet
     for (t <- Seq(0L, 2L, 100L)) {
-      val got = KHop.kHopEdgesSkew(rels, 3, hotThreshold = t,
-          originPred = pred, persist = false)
-        .as[(Long, Long, Long)].collect().toSet
+      val got = KHop.withKHopEdgesSkew(rels, 3, hotThreshold = t,
+          originPred = pred)(_.as[(Long, Long, Long)].collect().toSet)
       assert(got == want, s"threshold $t")
     }
   }
 
   test("skew-split general-k plans the broadcast hot-set path") {
-    val plan = KHop.kHopEdgesSkew(rels, 3, hotThreshold = 2, persist = false)
-      .queryExecution.executedPlan.toString
+    val plan = KHop.withKHopEdgesSkew(rels, 3, hotThreshold = 2)(
+      _.queryExecution.executedPlan.toString)
     assert(plan.contains("BroadcastHashJoin"), s"no broadcast in:\n$plan")
-  }
-
-  test("skew builds expose cache handles that release cleanly") {
-    import org.apache.spark.storage.StorageLevel
-    val (df, cached) = KHop.twoHopSkewBuild(rels, 2L, None, persist = true)
-    df.count()
-    assert(cached.nonEmpty && cached.forall(_.storageLevel.useMemory))
-    cached.foreach(_.unpersist(blocking = true))
-    assert(cached.forall(_.storageLevel == StorageLevel.NONE))
   }
 
   test("with-brackets compute the right set and release their caches") {
@@ -187,6 +177,16 @@ class KHopSpec extends AnyFunSuite {
     assert(r2 == KHop.kHopEdges(rels, 3).as[(Long, Long, Long)].collect().toSet)
     assert(eProbe.storageLevel == StorageLevel.NONE, "kHop bracket leaked")
     assert(added(before).isEmpty, "kHop bracket left RDDs persisted")
+    before = sc.getPersistentRDDs.keySet.toSet
+    val r3 = KHop.withKHopStatsSkew(rels, 3, hotThreshold = 2, None,
+        (s: Column, d: Column) => s * 7L + d) { df =>
+      assert(eProbe.storageLevel.useMemory)
+      df.as[(Long, Long, Long)].collect().toSet
+    }
+    assert(r3 == r2.groupBy(_._1).map { case (o, es) =>
+      (o, es.size.toLong, es.toSeq.map(x => x._2 * 7L + x._3).sum) }.toSet)
+    assert(eProbe.storageLevel == StorageLevel.NONE, "stats bracket leaked")
+    assert(added(before).isEmpty, "stats bracket left RDDs persisted")
   }
 
   test("SparkEntry khop skew gates run bracketed and leak no cache") {
