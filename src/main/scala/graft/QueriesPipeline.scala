@@ -8,6 +8,7 @@ import graft.functions.VectorFunctions.round6
 import graft.functions.TextFunctions._
 import graft.operators.{CorpusTools, Dedup, Multimodal, Preference, Quality, Similarity, Skew}
 import graft.sources.TpchGraph.table
+import graft.streaming.{StageFiles, Streams}
 
 /** North-star LLM-training-data pipeline operators over the `documents` /
   * `embeddings` tables: deduplication (exact, n-gram Jaccard, MinHash+LSH,
@@ -24,32 +25,6 @@ object QueriesPipeline {
     * (CorpusTools.unigramVocab/Segment): word counts over the corpus,
     * all substrings of length 1..4 with multiplicity, top-64 ∪ single
     * chars, integer bit-length surprisal costs. */
-  /** Shared streaming-gate scaffold: run `out` to a memory sink with
-    * AvailableNow under 8 shuffle partitions, eagerly materialize the
-    * sink table, then DROP the temp view (a leaked view per gate run
-    * otherwise accumulates on the driver). */
-  private def runStreamToMemory(s: SparkSession, out: DataFrame,
-                                prefix: String, mode: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val qname = s"${prefix}_${System.nanoTime()}"
-    val ck = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(ck)
-    s.conf.set(ck, "8")
-    try {
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally s.conf.set(ck, prev)
-    val result = s.table(qname).localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    result
-  }
-
-  /** Recursive delete for a gate's staging directory. */
-  private def rmTree(p: java.io.File): Unit = {
-    Option(p.listFiles).foreach(_.foreach(rmTree)); p.delete(); ()
-  }
-
   /** Multi-batch file staging — see [[graft.streaming.StageFiles]]. */
   private def stageTimedParquet(df: DataFrame, base: String, src: String,
                                 seq: Int): Unit =
@@ -375,8 +350,7 @@ object QueriesPipeline {
     "stream_dedup_lsh" -> ((s, dir) => {
       import java.nio.file.{Files, Paths}
       val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-      val base = s"/tmp/graft_sdlsh_" +
-        s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${System.nanoTime()}"
+      val base = StageFiles.dir("sdlsh", dir)
       try {
         val src = s"$base/src"
         Files.createDirectories(Paths.get(src))
@@ -394,11 +368,11 @@ object QueriesPipeline {
               col("a.key") === col("b.key") &&
               col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        runStreamToMemory(s, joined, "graft_sdlsh", "append").distinct()
+        Streams.toMemory(s, joined, "graft_sdlsh", "append").distinct()
           .groupBy(col("doc_a"))
           .agg(count(lit(1)).as("n_pairs"), sum(col("doc_b")).as("checksum"))
           .localCheckpoint(true)
-      } finally rmTree(new java.io.File(base))
+      } finally StageFiles.rm(base)
     }),
     // batch-train / online-score: fit the perceptron on the STATIC
     // corpus, ship the weight vector into a streaming scoring fold
@@ -409,19 +383,18 @@ object QueriesPipeline {
         .select(col("doc_id"), col("lang"), col("text"))
       val w = CorpusTools.perceptronFit(docs, "doc_id", "text",
         positive = col("lang") === "en", d = 64, iters = 3)
-      val base = s"/tmp/graft_sqscore_" +
-        s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${System.nanoTime()}"
+      val base = StageFiles.dir("sqscore", dir)
       try {
         docs.coalesce(1).write.mode("overwrite").parquet(base)
         val stream = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", 1).parquet(base)
         val scored = CorpusTools.perceptronScoreWith(stream, "doc_id",
           "text", positive = col("lang") === "en", d = 64, weights = w)
-        runStreamToMemory(s,
+        Streams.toMemory(s,
           scored.groupBy(col("y"), col("pred"))
             .agg(count(lit(1)).as("n"), sum(col("score")).as("score_sum")),
           "graft_sqscore", "complete")
-      } finally rmTree(new java.io.File(base))
+      } finally StageFiles.rm(base)
     }),
     // ingest-time shape: a new batch (doc_id % 4 = 0) screened against
     // the existing corpus (the rest) — band keys meet in one equi-join,
@@ -1287,8 +1260,7 @@ object QueriesPipeline {
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val c1 = lo + (hi - lo) / 3
       val c2 = lo + 2 * ((hi - lo) / 3)
-      val base = s"/tmp/graft_sprefc_" +
-        s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${System.nanoTime()}"
+      val base = StageFiles.dir("sprefc", dir)
       try {
         val src = s"$base/src"
         Files.createDirectories(Paths.get(src))
@@ -1305,10 +1277,10 @@ object QueriesPipeline {
           .option("maxFilesPerTrigger", 1).parquet(src)
           .as[graft.streaming.PrefEvent]
         val out = graft.streaming.StatefulMatchups.matches(stream).toDF()
-        runStreamToMemory(s, out, "graft_sprefc", "update")
+        Streams.toMemory(s, out, "graft_sprefc", "update")
           .groupBy(col("winner"), col("loser"))
           .agg(count(lit(1)).as("n_matches"))
-      } finally rmTree(new java.io.File(base))
+      } finally StageFiles.rm(base)
     }),
 
     // distribution drift across dataset versions (v2 = dataset_diff's

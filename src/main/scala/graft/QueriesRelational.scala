@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{AsOfJoin, RangeJoin, Sessionize, TopK}
 import graft.sources.TpchGraph.table
+import graft.streaming.{StageFiles, Streams}
 
 /** SURVEY.md §2.7 coverage — every checklist category the reference lacks,
   * provided as first-class Spark operators: joins (broadcast / semi / anti /
@@ -18,23 +19,6 @@ import graft.sources.TpchGraph.table
 object QueriesRelational {
 
   private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
-
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to `n`, then
-    * restore. The streaming gates execute their micro-batches inside the
-    * gate function, and every stateful operator opens one state store PER
-    * shuffle partition PER micro-batch — at the session default of 32 the
-    * store init/commit fixed cost dominates the gate (stream_join_outer:
-    * 3 forced micro-batches × 2 join state stores × 32 partitions ≈
-    * 54–84 s of overhead for a sub-second join). 8 partitions still
-    * exercises distributed state; a production deployment sizes this to
-    * cluster cores × key cardinality, not to the gate's single input file. */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T)
-      : T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   /** Shared harness for the stream-stream OUTER-join gates: stages the
     * events as three mtime-ordered source files (real data, then two
@@ -48,7 +32,6 @@ object QueriesRelational {
     * drop user_id < 0). */
   private def streamJoinStaged(s: SparkSession, dir: String,
                                joinType: String, tag: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import java.nio.file.attribute.FileTime
     val e = table(s, dir, "events")
@@ -69,8 +52,7 @@ object QueriesRelational {
     // per-run unique staging base: two concurrent runs of the same gate
     // on the same sfDir (e.g. parallel Verify invocations) must not
     // interleave each other's staged files
-    val base = s"/tmp/graft_${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}" +
-      s"_${System.nanoTime()}"
+    val base = StageFiles.dir(tag, dir)
     val src = s"$base/src"
     Files.createDirectories(Paths.get(src))
     Paths.get(src).toFile.listFiles.foreach(_.delete())
@@ -83,37 +65,12 @@ object QueriesRelational {
       stream.where(col("event_type") === "click"),
       stream.where(col("event_type") === "purchase"),
       joinType = joinType)
-    val qname = s"graft_stream_join_${tag}_${System.nanoTime()}"
-    withShufflePartitions(s, 8) {
-      val q = joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    val out = Streams.toMemory(s, joined, s"graft_stream_join_$tag",
+      "append")
     // staged files are consumed; drop the per-run dir so unique-suffixed
-    // runs don't accumulate in /tmp
-    def rm(p: java.io.File): Unit = {
-      Option(p.listFiles).foreach(_.foreach(rm)); p.delete()
-    }
-    rm(new java.io.File(base))
-    s.table(qname)
-  }
-
-  /** Per-run UNIQUE /tmp staging dir (r6 ADVICE): fixed paths keyed only
-    * by the dataset dir race under concurrent sweeps — one run's
-    * overwrite interleaves another run's streaming read, exactly the
-    * mechanism behind the r5/r6 red rows. Every staged gate takes a
-    * nanoTime-suffixed dir and deletes it via `rmStaging` once the
-    * AvailableNow stream has fully drained (results live in the memory
-    * sink or are checkpointed first, never in the staged files). */
-  private def stagingDir(tag: String, dir: String): String =
-    s"/tmp/graft_${tag}_src_${dir.replaceAll("[^a-zA-Z0-9]", "_")}" +
-      s"_${System.nanoTime()}"
-
-  private def rmStaging(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(path))
+    // runs don't accumulate in the temp dir
+    StageFiles.rm(base)
+    out
   }
 
   /** Watermark delay for the streaming sessionization gates: wider than
@@ -136,13 +93,12 @@ object QueriesRelational {
         Long) => org.apache.spark.sql.Dataset[graft.streaming.SessionSummary])
       : DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val gapMs = 1800L * 1000L
     val e = table(s, dir, "events").select(col("user_id"), col("ts"))
     val maxUs = e.agg(max(unix_micros(col("ts")))).as[Long].head()
     val aug = e.unionByName(e.select(col("user_id")).distinct()
       .withColumn("ts", timestamp_micros(lit(maxUs + 2 * gapMs * 1000L))))
-    val tmp = stagingDir(tag, dir)
+    val tmp = StageFiles.dir(tag, dir)
     // ONE part-file: the file source batches at file granularity, so a
     // single file is structurally guaranteed to land in one microbatch —
     // a sentinel processed BEFORE a user's real events would otherwise
@@ -153,14 +109,10 @@ object QueriesRelational {
     val stream = s.readStream.schema(aug.schema).parquet(tmp)
     val sessions = sessionsFn(
       stream.as[graft.streaming.UserEvent], gapMs)
-    val qname = s"graft_sessionize_${tag}_${System.nanoTime()}"
-    withShufflePartitions(s, 8) {
-      val q = sessions.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    rmStaging(tmp)
-    s.table(qname)
+    val sunk = Streams.toMemory(s, sessions.toDF(),
+      s"graft_sessionize_$tag", "append")
+    StageFiles.rm(tmp)
+    sunk
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"),
         sum(col("n_events")).as("n_events"),
@@ -473,27 +425,20 @@ object QueriesRelational {
     // sketch maintains itself as a STREAMING aggregate; quantiles read
     // off the sunk histogram must equal the batch rank test
     "stream_quantile" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val e = table(s, dir, "events").select(col("event_id"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT) div 500")
           .as("bin"))
-      val tmp = stagingDir("squant", dir)
+      val tmp = StageFiles.dir("squant", dir)
       e.where(col("event_id") % 2 === 0).select(col("bin")).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       e.where(col("event_id") % 2 =!= 0).select(col("bin")).coalesce(1)
         .write.mode("append").parquet(tmp)
       val stream = s.readStream.schema("bin BIGINT")
         .option("maxFilesPerTrigger", "1").parquet(tmp)
-      val qname = s"graft_stream_quant_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = stream.groupBy(col("bin"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(tmp)
-      val c = s.table(qname)
+      val c = Streams.toMemory(s,
+        stream.groupBy(col("bin")).agg(count(lit(1)).as("n")),
+        "graft_stream_quant", "complete")
+      StageFiles.rm(tmp)
       val cum = c.withColumn("n_le", sum(col("n")).over(
         Window.orderBy(col("bin"))))  // #bins rows — a constant, bounded
       val tot = c.agg(sum(col("n")).as("total"))
@@ -566,9 +511,8 @@ object QueriesRelational {
     // micro-batches; probe estimates off the sunk grid must equal the
     // batch sketch (sketch_cms's own oracle, shared text)
     "stream_cms" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-      val tmp = stagingDir("scms", dir)
+      val tmp = StageFiles.dir("scms", dir)
       d.where(col("doc_id") % 2 === 0).select(col("text")).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       d.where(col("doc_id") % 2 =!= 0).select(col("text")).coalesce(1)
@@ -577,17 +521,12 @@ object QueriesRelational {
         .option("maxFilesPerTrigger", "1").parquet(tmp)
       val regs = graft.operators.Sketches.countMinBuild(stream, "text",
         width = 256)
-      val qname = s"graft_stream_cms_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = regs.writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(tmp)
+      val sunk = Streams.toMemory(s, regs, "graft_stream_cms", "complete")
+      StageFiles.rm(tmp)
       import s.implicits._
       val probes = Seq("join", "hash", "row", "batch", "scan", "customer",
         "the", "xyzzy").toDF("word")
-      graft.operators.Sketches.countMinEstimate(s.table(qname), probes,
+      graft.operators.Sketches.countMinEstimate(sunk, probes,
         width = 256)
     }),
     // OHLC bars: per (event_type, hour) open/high/low/close in exact
@@ -766,23 +705,18 @@ object QueriesRelational {
     // dropDuplicatesWithinWatermark; the oracle is the duplicate-free
     // per-type count (the injected copies must all collapse)
     "stream_dedup" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val e = table(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("ts"))
       val aug = e.unionByName(e.where(col("event_id") % 10 === 0))
-      val tmp = stagingDir("dedup", dir)
+      val tmp = StageFiles.dir("dedup", dir)
       aug.coalesce(1).write.mode("overwrite").parquet(tmp)
       val stream = s.readStream.schema(aug.schema).parquet(tmp)
-      val qname = s"graft_stream_dedup_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = graft.streaming.EventStreams.dedup(stream,
-          watermark = SessionStreamWatermark)
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(tmp)
-      s.table(qname).groupBy(col("event_type"))
+      val sunk = Streams.toMemory(s,
+        graft.streaming.EventStreams.dedup(stream,
+          watermark = SessionStreamWatermark),
+        "graft_stream_dedup", "append")
+      StageFiles.rm(tmp)
+      sunk.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"))
     }),
     // STREAMING windowed heavy hitters (trending detection): hourly
@@ -790,26 +724,21 @@ object QueriesRelational {
     // bounded-snapshot twin of the production watermark+append path),
     // then the bounded per-window top-3 ranks in batch
     "stream_topn" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val e = table(s, dir, "events")
         .select(col("ts"), col("event_type"), col("value"))
-      val tmp = stagingDir("topn", dir)
+      val tmp = StageFiles.dir("topn", dir)
       e.coalesce(1).write.mode("overwrite").parquet(tmp)
       val stream = s.readStream.schema(e.schema).parquet(tmp)
-      val qname = s"graft_stream_topn_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = stream
+      val sunk = Streams.toMemory(s,
+        stream
           .groupBy(window(col("ts"), "1 hour").as("w"),
             col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm")
-            .as("hour"), col("event_type"), col("n"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(tmp)
-      s.table(qname)
+            .as("hour"), col("event_type"), col("n")),
+        "graft_stream_topn", "complete")
+      StageFiles.rm(tmp)
+      sunk
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("hour"))
             .orderBy(col("n").desc, col("event_type"))).cast("long"))
@@ -822,27 +751,22 @@ object QueriesRelational {
     // a multi-batch run so state genuinely carries across batches, and
     // the oracle is the identical batch group-by over all events
     "stream_incr_agg" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val e = table(s, dir, "events").select(col("user_id"),
         floor(col("value") * 1000).cast("long").as("v"))
-      val tmp = stagingDir("sincr", dir)
+      val tmp = StageFiles.dir("sincr", dir)
       e.where(col("user_id") % 10 =!= 0).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       e.where(col("user_id") % 10 === 0).coalesce(1)
         .write.mode("append").parquet(tmp)
       val stream = s.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", "1").parquet(tmp)
-      val qname = s"graft_stream_incr_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = stream.groupBy(col("user_id"))
+      val sunk = Streams.toMemory(s,
+        stream.groupBy(col("user_id"))
           .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"),
-            min(col("v")).as("min_v"), max(col("v")).as("max_v"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(tmp)
-      s.table(qname)
+            min(col("v")).as("min_v"), max(col("v")).as("max_v")),
+        "graft_stream_incr", "complete")
+      StageFiles.rm(tmp)
+      sunk
     }),
     // STREAMING funnel maintenance: the strict-order funnel_stages
     // pipeline maintained incrementally by StatefulFunnel — per-user
@@ -854,7 +778,6 @@ object QueriesRelational {
     // the batch funnel's membership — checked against the SAME oracle
     // text as funnel_stages.
     "stream_funnel" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       import java.nio.file.{Files, Paths, StandardCopyOption}
       import java.nio.file.attribute.FileTime
       val e = table(s, dir, "events")
@@ -864,8 +787,7 @@ object QueriesRelational {
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val c1 = lo + (hi - lo) / 3
       val c2 = lo + 2 * ((hi - lo) / 3)
-      val base = s"/tmp/graft_sfunnel_" +
-        s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${System.nanoTime()}"
+      val base = StageFiles.dir("sfunnel", dir)
       val src = s"$base/src"
       Files.createDirectories(Paths.get(src))
       def stage(df: DataFrame, n: Int): Unit =
@@ -878,16 +800,13 @@ object QueriesRelational {
       val stream = s.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
         .as[graft.streaming.FunnelEvent]
-      val qname = s"graft_stream_funnel_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = graft.streaming.StatefulFunnel.progress(stream,
+      val sunk = Streams.toMemory(s,
+        graft.streaming.StatefulFunnel.progress(stream,
             Seq("view", "click", "purchase"))
-          .toDF().writeStream.format("memory").queryName(qname)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(base)
-      val fin = s.table(qname).groupBy(col("user_id"))
+          .toDF(),
+        "graft_stream_funnel", "update")
+      StageFiles.rm(base)
+      val fin = sunk.groupBy(col("user_id"))
         .agg(max(col("stage")).as("reached"))
       val labels = Seq((1L, "1_view"), (2L, "2_click"), (3L, "3_purchase"))
         .toDF("k", "stage")
@@ -900,10 +819,9 @@ object QueriesRelational {
     // estimate read off the sink must equal the batch-built sketch
     // (sketch_hll_grouped's own oracle, shared text)
     "stream_hll" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val e = table(s, dir, "events")
         .select(col("event_type"), col("user_id"))
-      val tmp = stagingDir("shll", dir)
+      val tmp = StageFiles.dir("shll", dir)
       e.where(col("user_id") % 2 === 0).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       e.where(col("user_id") % 2 =!= 0).coalesce(1)
@@ -912,15 +830,10 @@ object QueriesRelational {
         .option("maxFilesPerTrigger", "1").parquet(tmp)
       val regs = graft.operators.Sketches.hllBuildGrouped(
         stream, Seq("event_type"), "user_id", m = 32)
-      val qname = s"graft_stream_hll_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = regs.writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(tmp)
+      val sunk = Streams.toMemory(s, regs, "graft_stream_hll", "complete")
+      StageFiles.rm(tmp)
       graft.operators.Sketches.hllEstimateGrouped(
-        s.table(qname), Seq("event_type"), m = 32)
+        sunk, Seq("event_type"), m = 32)
     }),
     // EVENT-TIME-WINDOWED sketch state: per-(event_type, day) HLL
     // registers maintain themselves as a streaming aggregate (register
@@ -930,12 +843,11 @@ object QueriesRelational {
     // window. Estimates off the sunk registers must equal the batch
     // windowed sketch.
     "stream_hll_windowed" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val e = table(s, dir, "events")
         .select(col("event_type"),
           expr("unix_micros(ts) div 86400000000").as("day"),
           col("user_id"))
-      val tmp = stagingDir("shllw", dir)
+      val tmp = StageFiles.dir("shllw", dir)
       e.where(col("user_id") % 2 === 0).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       e.where(col("user_id") % 2 =!= 0).coalesce(1)
@@ -944,15 +856,10 @@ object QueriesRelational {
         .option("maxFilesPerTrigger", "1").parquet(tmp)
       val regs = graft.operators.Sketches.hllBuildGrouped(
         stream, Seq("event_type", "day"), "user_id", m = 32)
-      val qname = s"graft_stream_hllw_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = regs.writeStream.format("memory").queryName(qname)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(tmp)
+      val sunk = Streams.toMemory(s, regs, "graft_stream_hllw", "complete")
+      StageFiles.rm(tmp)
       graft.operators.Sketches.hllEstimateGrouped(
-        s.table(qname), Seq("event_type", "day"), m = 32)
+        sunk, Seq("event_type", "day"), m = 32)
     }),
 
     // STREAM-STATIC enrichment under the gate: events flow through a
@@ -960,24 +867,19 @@ object QueriesRelational {
     // micro-batch (no state, no watermark needed — the bounded-by-
     // construction join class); the oracle is the equivalent batch join
     "stream_enrich" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val e = table(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
-      val tmp = stagingDir("senrich", dir)
+      val tmp = StageFiles.dir("senrich", dir)
       e.coalesce(1).write.mode("overwrite").parquet(tmp)
       val stream = s.readStream.schema(e.schema).parquet(tmp)
       val dim = table(s, dir, "customer")
         .select(col("c_custkey").as("user_id"),
           col("c_mktsegment").as("segment"))
-      val qname = s"graft_stream_enrich_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = graft.streaming.EventStreams.enrich(stream, dim, "user_id")
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(tmp)
-      s.table(qname).groupBy(col("segment"), col("event_type"))
+      val sunk = Streams.toMemory(s,
+        graft.streaming.EventStreams.enrich(stream, dim, "user_id"),
+        "graft_stream_enrich", "append")
+      StageFiles.rm(tmp)
+      sunk.groupBy(col("segment"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"))
     }),
     // INCREMENTAL CDC materialization under the gate: the event
@@ -992,19 +894,18 @@ object QueriesRelational {
           col("value"))
       // per-run unique base: stale state/checkpoints from a concurrent
       // or crashed run would otherwise corrupt the versioned merge
-      val base = stagingDir("cdc_stream", dir)
+      val base = StageFiles.dir("cdc_stream", dir)
       val src = s"$base/src"
       for (i <- 0 until 3)
         e.where(col("event_id") % 3 === i).coalesce(1)
           .write.mode("append").parquet(src)
       val stream = s.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-      withShufflePartitions(s, 8) {
-        val q = graft.streaming.EventStreams.materializeChangelog(
+      Streams.run(s) {
+        graft.streaming.EventStreams.materializeChangelog(
           stream, s"$base/state", s"$base/ckpt",
           key = "user_id", seq = "event_id",
-          isDelete = col("event_type") === "error")
-        q.awaitTermination()
+          isDelete = col("event_type") === "error").awaitTermination()
       }
       val v = graft.streaming.EventStreams.latestVersion(s"$base/state").get
       // the result READS the staged state dir — materialize eagerly
@@ -1015,7 +916,7 @@ object QueriesRelational {
           col("event_type").as("last_event_type"),
           col("value").as("last_value"))
         .localCheckpoint(true)
-      rmStaging(base)
+      StageFiles.rm(base)
       out
     }),
     // STREAM-STREAM interval join under the gate: clicks and purchases
@@ -1025,24 +926,20 @@ object QueriesRelational {
     // events, so the inner join emits every qualifying pair — the oracle
     // is the equivalent batch interval join in microsecond arithmetic.
     "stream_join" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val e = table(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts"))
-      val tmp = stagingDir("sjoin", dir)
+      val tmp = StageFiles.dir("sjoin", dir)
       e.coalesce(1).write.mode("overwrite").parquet(tmp)
       def stream = s.readStream.schema(e.schema).parquet(tmp)
       val joined = graft.streaming.EventStreams.purchaseAttribution(
         stream.where(col("event_type") === "click"),
         stream.where(col("event_type") === "purchase"))
-      val qname = s"graft_stream_join_${System.nanoTime()}"
-      withShufflePartitions(s, 8) {
-        val q = joined.writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      rmStaging(tmp)
-      s.table(qname).groupBy(col("user_id"))
+      val sunk = Streams.toMemory(s,
+        joined,
+        "graft_stream_join", "append")
+      StageFiles.rm(tmp)
+      sunk.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
           sum(col("click_id") * 100003L + col("purchase_id"))
             .as("checksum"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Bucketing, ScaleOps}
 import graft.sources.TpchGraph.table
+import graft.streaming.StageFiles
 
 /** Storage-layout / maintenance gates — the decisions that dominate cost
   * at 100 TB, each demonstrated end-to-end on real files and replayed by
@@ -23,17 +24,6 @@ object QueriesScale {
 
   private def san(dir: String): String =
     dir.replaceAll("[^a-zA-Z0-9]", "_")
-
-  /** Delete a staged dir once the gate's result is materialized (r6
-    * verdict #3: unique per-run names fixed the race but left every
-    * sweep's staging behind — 3 SFs × rounds of unbounded /tmp and
-    * warehouse growth). Callers localCheckpoint the result FIRST. */
-  private def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(path))
-  }
 
   /** Scope a SQL conf to `body`, restoring the previous value. */
   private def withConf[T](s: SparkSession, key: String, v: String)
@@ -57,7 +47,7 @@ object QueriesScale {
     // race on a shared staging path).
     "bucket_join" -> ((s, dir) => {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_bkt " +
-        "LOCATION '/tmp/graft_warehouse'")
+        s"LOCATION '${StageFiles.tmp("graft_warehouse")}'")
       val tok = s"${san(dir)}_${System.nanoTime()}"
       val o = table(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"))
@@ -90,7 +80,7 @@ object QueriesScale {
     // file skipping (partition pruning); `file_skipping` below audits
     // the fine-grained (zone-map) kind.
     "partition_prune" -> ((s, dir) => {
-      val base = s"/tmp/graft_part_${san(dir)}_${System.nanoTime()}"
+      val base = StageFiles.dir("part", dir)
       table(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(base)
@@ -107,7 +97,7 @@ object QueriesScale {
           .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id"),
             countDistinct(col("user_id")).as("n_users"))
           .localCheckpoint(true)
-      } finally rmTree(base)
+      } finally StageFiles.rm(base)
     }),
 
     // Schema evolution: generation 1 wrote (doc_id, lang); generation 2
@@ -116,7 +106,7 @@ object QueriesScale {
     // vs count(*) makes the null-fill visible and oracle-checked.
     // At 100 TB schema changes are rolling, never rewrite-the-world.
     "schema_evolution" -> ((s, dir) => {
-      val base = s"/tmp/graft_evo_${san(dir)}_${System.nanoTime()}"
+      val base = StageFiles.dir("evo", dir)
       val d = table(s, dir, "documents")
       d.where(col("doc_id") % 2 === 0).select(col("doc_id"), col("lang"))
         .write.parquet(s"$base/gen=1")
@@ -130,7 +120,7 @@ object QueriesScale {
             count(col("n_chars")).as("n_with_chars"),
             sum(col("n_chars")).as("sum_chars"))
           .localCheckpoint(true)
-      finally rmTree(base)
+      finally StageFiles.rm(base)
     }),
 
     // Zone-map audit: same table, same predicate

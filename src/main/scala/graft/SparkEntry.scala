@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.GraphRef
 import graft.sources.TpchGraph
+import graft.streaming.{GraphStreams, StageFiles, Streams}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -120,16 +121,10 @@ object SparkEntry {
           (col("TYPE") === "FROM_NATION" &&
             col("START_ID").between(2000000000L, 2999999999L)))
         .select(col("START_ID").as("src"), col("END_ID").as("dst"))
-      val base = s"/tmp/graft_stream_khop_" +
-        s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${System.nanoTime()}"
-      val src = graft.streaming.GraphStreams
-        .stageEdgeChangelog(edges, base, nSlices = 3)
-      val pairs = graft.streaming.GraphStreams
-        .twoHopOverChangelog(s, src, "gate")
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete()
-      }
-      rm(new java.io.File(base))
+      val base = StageFiles.dir("stream_khop", dir)
+      val src = GraphStreams.stageEdgeChangelog(edges, base, nSlices = 3)
+      val pairs = GraphStreams.twoHopOverChangelog(s, src, "gate")
+      StageFiles.rm(base)
       pairs.groupBy(col("origin"))
         .agg(count(lit(1)).as("n_edges"),
           sum(col("src") * lit(100003L) + col("dst")).as("checksum"))
@@ -146,16 +141,11 @@ object SparkEntry {
           (col("TYPE") === "FROM_NATION" &&
             col("START_ID").between(2000000000L, 2999999999L)))
         .select(col("START_ID").as("src"), col("END_ID").as("dst"))
-      val base = s"/tmp/graft_stream_khop3_" +
-        s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${System.nanoTime()}"
-      val src = graft.streaming.GraphStreams
-        .stageEdgeChangelog(edges, base, nSlices = 3)
-      val pairs = graft.streaming.GraphStreams
-        .threeHopOverChangelog(s, src, "gate", 2000000000L, 2999999999L)
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete()
-      }
-      rm(new java.io.File(base))
+      val base = StageFiles.dir("stream_khop3", dir)
+      val src = GraphStreams.stageEdgeChangelog(edges, base, nSlices = 3)
+      val pairs = GraphStreams.kHopOverChangelog(s, src, "gate", k = 3,
+        2000000000L, 2999999999L)
+      StageFiles.rm(base)
       pairs.groupBy(col("origin"))
         .agg(count(lit(1)).as("n_edges"),
           sum((col("src") % 100003L) * lit(100003L) + (col("dst") % 100003L))
@@ -178,35 +168,23 @@ object SparkEntry {
           (col("doc_id") - col("doc_id") % 7).as("dst"))
         .unionByName(d.where(col("doc_id") % 21 === 6)
           .select(col("doc_id").as("src"), (col("doc_id") + 1).as("dst")))
-      val base = s"/tmp/graft_stream_cc_" +
-        s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${System.nanoTime()}"
+      val base = StageFiles.dir("stream_cc", dir)
       try {
-        val src = graft.streaming.GraphStreams
-          .stageEdgeChangelog(edges, base, nSlices = 3)
+        val src = GraphStreams.stageEdgeChangelog(edges, base, nSlices = 3)
         val stream = s.readStream
           .schema("src BIGINT, dst BIGINT")
           .option("maxFilesPerTrigger", 1).parquet(src)
-        val key = "spark.sql.shuffle.partitions"
-        val prevConf = s.conf.get(key)
-        s.conf.set(key, "8")
-        try {
-          val q = graft.streaming.GraphStreams
-            .incrementalConnectedComponents(stream, s"$base/state",
-              s"$base/ckpt")
-          q.awaitTermination()
-        } finally s.conf.set(key, prevConf)
+        Streams.run(s) {
+          GraphStreams.incrementalConnectedComponents(stream,
+            s"$base/state", s"$base/ckpt").awaitTermination()
+        }
         val v = graft.streaming.EventStreams
           .latestVersion(s"$base/state").get
         s.read.parquet(s"$base/state/v$v")
           .groupBy(col("rep"))
           .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("checksum"))
           .localCheckpoint(true)  // materialize before deleting the state
-      } finally {
-        def rm(p: java.io.File): Unit = {
-          Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-        }
-        rm(new java.io.File(base))
-      }
+      } finally StageFiles.rm(base)
     }),
     // §2.3 generalized: k=3 (reach = distance ≤ 2) — beyond the
     // reference's fixed 2-hop, same aggregate check shape. Origins bounded
@@ -358,8 +336,7 @@ object SparkEntry {
       val g = graph(s, dir)
       // per-run unique staging + cleanup (r6 verdict #3): a fixed path
       // keyed only by dir races concurrent sweeps and accumulates in /tmp
-      val db = s"/tmp/graft_db_${dir.replaceAll("[^a-zA-Z0-9]", "_")}" +
-        s"_${System.nanoTime()}"
+      val db = StageFiles.dir("db", dir)
       try {
         val back = operators.GraphCatalog.bulkImport(g.nodes, g.rels, db)
         back.nodes
@@ -373,12 +350,7 @@ object SparkEntry {
             coalesce(col("n_nodes"), lit(0L)).as("n_nodes"),
             coalesce(col("n"), lit(0L)).as("n_rels"))
           .localCheckpoint(true)  // materialize before deleting the db
-      } finally {
-        def rm(p: java.io.File): Unit = {
-          Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-        }
-        rm(new java.io.File(db))
-      }
+      } finally StageFiles.rm(db)
     }),
     // S9 + S5: Arrow IPC egress → ingest round-trip inside the oracle gate
     // (per-partition streams, reference type envelope; counts per label
@@ -400,8 +372,7 @@ object SparkEntry {
     // through the same source (one partition per file), aggregate.
     "arrow_write_roundtrip" -> ((s, dir) => {
       val fmt = classOf[graft.sources.ArrowIpcSource].getName
-      val tmp = s"/tmp/graft_arrow_write_" +
-        s"${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${System.nanoTime()}"
+      val tmp = StageFiles.dir("arrow_write", dir)
       try {
         TpchGraph.table(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
@@ -411,12 +382,7 @@ object SparkEntry {
           .groupBy(col("o_orderstatus").as("status"))
           .agg(count(lit(1)).as("n"), sum(col("o_custkey")).as("sum_cust"))
           .localCheckpoint(true) // materialize before deleting the files
-      } finally {
-        def rm(p: java.io.File): Unit = {
-          Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-        }
-        rm(new java.io.File(tmp))
-      }
+      } finally StageFiles.rm(tmp)
     }),
     // Flight catalog and job semantics under the gate (reference:
     // Producer.java:86-510 over gRPC; here sources/FlightGrpc): PUT a
@@ -559,7 +525,6 @@ object SparkEntry {
     // reference's put-stream (BulkImportJob.java:49-51) completed into
     // a replayable streaming feed.
     "stream_flight_ingest" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val e = TpchGraph.table(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
       val server = new graft.sources.FlightGrpc.Server(s, "gate-token").start()
@@ -572,8 +537,7 @@ object SparkEntry {
             cli.doPutAppend("ev_log",
               e.where(col("event_id") % 3 === i).repartition(2))
           }
-          val qname = s"graft_flight_ingest_${System.nanoTime()}"
-          val q = s.readStream.format("graft.sources.FlightStreamSource")
+          val agg = s.readStream.format("graft.sources.FlightStreamSource")
             .option("host", "127.0.0.1")
             .option("port", server.port.toString)
             .option("token", "gate-token")
@@ -582,10 +546,11 @@ object SparkEntry {
             .groupBy(col("event_type"))
             .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"),
               round(sum(col("value")), 2).as("val_sum"))
-            .writeStream.format("memory").queryName(qname)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          s.table(qname).localCheckpoint(true)
+          // this gate's aggregation state keeps the session's partition
+          // count, as it always has
+          Streams.toMemory(s, agg, "graft_flight_ingest", "complete",
+            partitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
+            .localCheckpoint(true)
         } finally cli.close()
       } finally server.close()
     }),
@@ -607,8 +572,7 @@ object SparkEntry {
     // round-trip through CSV text)
     "csv_import" -> ((s, dir) => {
       // per-run unique staging + cleanup (r6 verdict #3)
-      val tmp = s"/tmp/graft_csv_${dir.replaceAll("[^a-zA-Z0-9]", "_")}" +
-        s"_${System.nanoTime()}"
+      val tmp = StageFiles.dir("csv", dir)
       try {
         TpchGraph.table(s, dir, "customer")
           .select(col("c_custkey").as("id:ID(Customer)"),
@@ -625,12 +589,7 @@ object SparkEntry {
             round(sum(col("acctbal")), 2).as("sum_acctbal"),
             sum(col("ID")).as("id_sum"))
           .localCheckpoint(true)  // materialize before deleting the csv
-      } finally {
-        def rm(p: java.io.File): Unit = {
-          Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-        }
-        rm(new java.io.File(tmp))
-      }
+      } finally StageFiles.rm(tmp)
     }),
     // S3: "cypher.read" analog — arbitrary query delegated to the SQL engine
     // (the reference delegates to Neo4j, TransactionApiJob.java:56-85; we

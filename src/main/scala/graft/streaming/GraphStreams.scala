@@ -48,29 +48,6 @@ object GraphStreams {
       .select(col("o").as("origin"), col("src"), col("dst"))
   }
 
-  /** CONTINUOUS 3-hop edge view — the k=3 instance of the same
-    * join-state pattern as [[twoHopEdgesPlan]], showing the frontier
-    * composes one self-join stage per hop (the reference's KHopMessage
-    * carries arbitrary k, KHopMessage.java:83-88, while its engine
-    * implements k=2; our batch twin is KHop.kHopEdges).
-    *
-    * KHOP.md golden semantics: reach = nodes within ≤ k−1 = 2 hops of an
-    * origin (origin itself, its neighbors, their neighbors), k-hop edge
-    * set = all edges incident to reach. Three INDEPENDENT derivations of
-    * the same edge feed are required (`reach1`/`reach2`/`incid` — for
-    * streaming: three separate `readStream`s), or Spark will refuse the
-    * self-joins. Origins are restricted by [lo, hi] to bound join state.
-    * Output (origin, src, dst) is a MULTISET of witnesses; readers dedup.
-    *
-    * Scale: hop count multiplies JOINS, not state per key — each
-    * stream-stream join's state is the (bounded) symmetric edge feed
-    * keyed by node, so a k-hop view is k−1 equi-joins against the same
-    * changelog, exactly how the batch plan scales. */
-  def threeHopEdgesPlan(reach1: DataFrame, reach2: DataFrame,
-                        incid: DataFrame, originLo: Long, originHi: Long)
-      : DataFrame =
-    kHopEdgesPlan(Seq(reach1, reach2, incid), originLo, originHi)
-
   /** ARBITRARY-k instance of the join-state pattern (the reference's
     * KHopMessage carries any k, KHopMessage.java:83-88): `feeds` must be
     * k INDEPENDENT derivations of the same edge changelog — feed i
@@ -111,53 +88,22 @@ object GraphStreams {
       .select(col("o").as("origin"), col("src"), col("dst"))
   }
 
+  /** One `readStream` over a staged (src, dst) edge changelog, one file
+    * per micro-batch. Each call is an INDEPENDENT derivation, as the
+    * self-joins above require. */
+  private def edgeFeed(s: SparkSession, srcDir: String): DataFrame =
+    s.readStream.schema("src BIGINT, dst BIGINT")
+      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+
   /** Run the continuous k-hop view over a staged edge changelog for any
-    * k (AvailableNow, memory sink), deduped per origin. */
+    * k (AvailableNow, memory sink, through [[Streams.toMemory]]), deduped
+    * per origin. */
   def kHopOverChangelog(s: SparkSession, srcDir: String, tag: String,
                         k: Int, originLo: Long, originHi: Long)
-      : DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(StructField("src", LongType),
-      StructField("dst", LongType)))
-    def feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val joined = kHopEdgesPlan(Seq.fill(k)(feed), originLo, originHi)
-    val qname = s"graft_stream_khop${k}_${tag}_${System.nanoTime()}"
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "8")
-    try {
-      val q = joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally s.conf.set(key, prev)
-    s.table(qname).distinct()
-  }
-
-  /** Run the continuous 3-hop view over a staged edge changelog
-    * (AvailableNow, memory sink) and return the DEDUPED per-origin edge
-    * sets — [[twoHopOverChangelog]]'s k=3 twin. */
-  def threeHopOverChangelog(s: SparkSession, srcDir: String, tag: String,
-                            originLo: Long, originHi: Long): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(StructField("src", LongType),
-      StructField("dst", LongType)))
-    def feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val joined = threeHopEdgesPlan(feed, feed, feed, originLo, originHi)
-    val qname = s"graft_stream_khop3_${tag}_${System.nanoTime()}"
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "8")
-    try {
-      val q = joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally s.conf.set(key, prev)
-    s.table(qname).distinct()
-  }
+      : DataFrame =
+    Streams.toMemory(s,
+      kHopEdgesPlan(Seq.fill(k)(edgeFeed(s, srcDir)), originLo, originHi),
+      s"graft_stream_khop${k}_$tag", "append").distinct()
 
   /** Stage an edge table as `nSlices` mtime-ordered parquet files under
     * `base/src` (slice = src mod nSlices — deterministic), so a
@@ -281,31 +227,12 @@ object GraphStreams {
   }
 
   /** Run the continuous 2-hop view over a staged edge changelog to a
-    * memory sink (AvailableNow — drains every staged batch through the
-    * incremental join, then stops) and return the DEDUPED per-origin
-    * edge sets as (origin, src, dst). `schema` must match the staged
-    * files. */
+    * memory sink (AvailableNow through [[Streams.toMemory]] — drains
+    * every staged batch through the incremental join, then stops) and
+    * return the DEDUPED per-origin edge sets as (origin, src, dst). */
   def twoHopOverChangelog(s: SparkSession, srcDir: String,
-                          tag: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(StructField("src", LongType),
-      StructField("dst", LongType)))
-    def feed = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val joined = twoHopEdgesPlan(feed, feed)
-    val qname = s"graft_stream_khop_${tag}_${System.nanoTime()}"
-    // state stores open per shuffle partition per micro-batch; 8 keeps
-    // the fixed cost proportionate (same rationale as the stream-join
-    // gates) while still exercising distributed state
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "8")
-    try {
-      val q = joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally s.conf.set(key, prev)
-    s.table(qname).distinct()
-  }
+                          tag: String): DataFrame =
+    Streams.toMemory(s,
+      twoHopEdgesPlan(edgeFeed(s, srcDir), edgeFeed(s, srcDir)),
+      s"graft_stream_khop_$tag", "append").distinct()
 }

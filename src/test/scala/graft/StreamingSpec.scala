@@ -236,9 +236,11 @@ class StreamingSpec extends AnyFunSuite {
     val base = s"/tmp/graft_stream_khop_spec_${System.nanoTime()}"
     val src = graft.streaming.GraphStreams
       .stageEdgeChangelog(edges, base, nSlices = 2)
-    val got = graft.streaming.GraphStreams
+    val views = TestSpark.tempViews
+    val pairs = graft.streaming.GraphStreams
       .twoHopOverChangelog(spark, src, "spec")
-      .as[(Long, Long, Long)].collect().toSet
+    assert(TestSpark.tempViews == views)  // the sink's view is dropped
+    val got = pairs.as[(Long, Long, Long)].collect().toSet
     val want = graft.operators.KHop.twoHopEdges(
         edges.toDF("START_ID", "END_ID")
           .withColumn("TYPE",

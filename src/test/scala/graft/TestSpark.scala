@@ -29,4 +29,9 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Names of the session's temporary views. */
+  def tempViews: Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+      .toSet
 }
