@@ -44,7 +44,10 @@ final case class GraphRef(nodes: DataFrame, rels: DataFrame) {
     * value`), mimicking gds.graph.streamRelationshipProperties
     * (GdsReadJob.java:235-360). Types with none of the requested properties
     * emit a single row with null property/value (the rel itself is still
-    * streamed). Implemented as a codegen'd `stack`-style melt — no shuffle.
+    * streamed). Implemented as a `posexplode` melt — no shuffle, and no
+    * higher-order function, so the whole scan stays in generated code
+    * (a `filter(pairs, lambda)` melt runs every row through the
+    * interpreter).
     */
   def relScan(props: Seq[String] = Nil, types: Seq[String] = Nil): DataFrame = {
     val available = rels.columns.filterNot(c =>
@@ -57,19 +60,25 @@ final case class GraphRef(nodes: DataFrame, rels: DataFrame) {
     }
     val filtered =
       if (types.isEmpty) rels else rels.where(col("TYPE").isin(types: _*))
-    // melt: array of (property, value) structs for non-null values; empty →
-    // single null-property row.
-    val pairs = array(wanted.map(p =>
-      struct(lit(p).as("property"), col(p).cast("double").as("value"))): _*)
-    val present = filter(pairs, s => s.getField("value").isNotNull)
-    val withFallback = when(size(present) > 0, present).otherwise(
-      array(struct(lit(null.asInstanceOf[String]).as("property"),
-        lit(null).cast("double").as("value"))))
+    val keys = Seq(col("START_ID"), col("END_ID"), col("TYPE"))
+    if (wanted.isEmpty)
+      return filtered.select(keys ++ Seq(
+        lit(null).cast("string").as("property"),
+        lit(null).cast("double").as("value")): _*)
+    // melt: one (property, value) pair per wanted property; keep the
+    // non-null values, and for a rel whose values are ALL null keep
+    // position 0 as its single null-property row
+    val values = wanted.map(p => col(p).cast("double"))
+    val pairs = array(wanted.zip(values).map { case (p, v) =>
+      struct(lit(p).as("property"), v.as("value"))
+    }: _*)
+    val kept = col("pv.value").isNotNull
     filtered
-      .select(col("START_ID"), col("END_ID"), col("TYPE"),
-        explode(withFallback).as("pv"))
-      .select(col("START_ID"), col("END_ID"), col("TYPE"),
-        col("pv.property").as("property"), col("pv.value").as("value"))
+      .select(keys ++ Seq(coalesce(values: _*).isNull.as("all_null"),
+        posexplode(pairs).as(Seq("pos", "pv"))): _*)
+      .where(kept || (col("all_null") && col("pos") === 0))
+      .select(keys ++ Seq(when(kept, col("pv.property")).as("property"),
+        when(kept, col("pv.value")).as("value")): _*)
   }
 
   /** W2 — adjacency (CSR-like) build: per (TYPE, source) sorted target list

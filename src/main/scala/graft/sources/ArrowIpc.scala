@@ -254,18 +254,17 @@ object ArrowIpc {
     * partition per file. Batches stream straight to the
     * `FSDataOutputStream`: a partition of any size writes in O(batchSize)
     * heap, never as a whole-partition byte array (the 2 GiB array
-    * ceiling / heap blowup a fat partition would otherwise hit). */
+    * ceiling / heap blowup a fat partition would otherwise hit). Each
+    * task creates its file through [[HadoopFiles]] — the executor JVM's
+    * one parsed Hadoop config — so the file keeps its `.crc`. */
   def writeIpcFiles(df: DataFrame, dir: String,
                     batchSize: Int = DefaultBatchSize,
                     fixedSizeArrays: Boolean = false): Unit = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.{FileSystem, Path}
     val sparkSchema = df.schema
     df.rdd.mapPartitionsWithIndex { (pid, rows) =>
       if (rows.nonEmpty) {
-        val p = new Path(s"$dir/part-$pid.arrow")
-        val fs = FileSystem.get(p.toUri, new Configuration())
-        val out = fs.create(p, true)
+        val p = new org.apache.hadoop.fs.Path(s"$dir/part-$pid.arrow")
+        val out = HadoopFiles.fs(p).create(p, true)
         try writeStream(rows, sparkSchema, batchSize, fixedSizeArrays, out)
         finally out.close()
       }

@@ -10,7 +10,7 @@ import org.apache.arrow.vector.complex.{FixedSizeListVector, ListVector}
 import org.apache.arrow.vector.ipc.ArrowStreamReader
 import org.apache.arrow.vector.types.FloatingPointPrecision
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -35,6 +35,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * 49-51); every other file is validated against it at read time. Type
   * envelope as §1.2: int32/int64/float32/float64/utf8 and lists of
   * int64/float32/float64/utf8.
+  *
+  * Every listing, open, create, rename and delete here goes through
+  * [[HadoopFiles]]: one Hadoop config parse per JVM instead of one per
+  * file operation, on the same checksummed file system, so written
+  * files keep their `.crc` and reads still verify it.
   */
 class ArrowIpcSource extends TableProvider {
 
@@ -60,7 +65,7 @@ object ArrowIpcSource {
 
   private[sources] def listFiles(dir: String): Seq[String] = {
     val p = new Path(dir)
-    val fs = FileSystem.get(p.toUri, new org.apache.hadoop.conf.Configuration())
+    val fs = HadoopFiles.fs(p)
     if (!fs.exists(p)) Seq.empty
     else if (fs.getFileStatus(p).isFile) Seq(dir)
     else fs.listStatus(p).toSeq.filter(_.isFile)
@@ -71,7 +76,7 @@ object ArrowIpcSource {
   private[sources] def readArrowSchema(file: String)
       : org.apache.arrow.vector.types.pojo.Schema = {
     val p = new Path(file)
-    val fs = FileSystem.get(p.toUri, new org.apache.hadoop.conf.Configuration())
+    val fs = HadoopFiles.fs(p)
     val in = fs.open(p)
     val allocator = new RootAllocator(Long.MaxValue)
     try {
@@ -193,7 +198,7 @@ final class ArrowIpcPartitionReader(file: String, schema: StructType)
   private val allocator = new RootAllocator(Long.MaxValue)
   private val in = {
     val p = new Path(file)
-    FileSystem.get(p.toUri, new org.apache.hadoop.conf.Configuration()).open(p)
+    HadoopFiles.fs(p).open(p)
   }
   private val reader = new ArrowStreamReader(in, allocator)
   private val root = {
@@ -299,8 +304,7 @@ final class ArrowIpcBatchWrite(schema: StructType, path: String,
       case ArrowIpcCommitMessage(f) if f.nonEmpty => new Path(f).getName
     }.toSet
     val dir = new Path(path)
-    val fs = FileSystem.get(dir.toUri,
-      new org.apache.hadoop.conf.Configuration())
+    val fs = HadoopFiles.fs(dir)
     if (fs.exists(dir)) {
       fs.listStatus(dir).toSeq.filter(_.isFile).foreach { st =>
         val name = st.getPath.getName
@@ -319,8 +323,7 @@ final class ArrowIpcBatchWrite(schema: StructType, path: String,
   override def abort(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
       : Unit = {
-    val fs = FileSystem.get(new Path(path).toUri,
-      new org.apache.hadoop.conf.Configuration())
+    val fs = HadoopFiles.fs(new Path(path))
     messages.foreach {
       case ArrowIpcCommitMessage(f) if f != null && f.nonEmpty =>
         fs.delete(new Path(f), false)
@@ -361,8 +364,7 @@ final class ArrowIpcDataWriter(schema: StructType, path: String,
   private var n = 0
 
   private def open(): Unit = {
-    val fs = FileSystem.get(tmpPath.toUri,
-      new org.apache.hadoop.conf.Configuration())
+    val fs = HadoopFiles.fs(tmpPath)
     fs.mkdirs(new Path(path))
     out = fs.create(tmpPath, true)
     allocator = new RootAllocator(Long.MaxValue)
@@ -399,8 +401,7 @@ final class ArrowIpcDataWriter(schema: StructType, path: String,
     flush()
     writer.end()
     out.close()
-    val fs = FileSystem.get(tmpPath.toUri,
-      new org.apache.hadoop.conf.Configuration())
+    val fs = HadoopFiles.fs(tmpPath)
     // no delete(finalPath): the job token makes the name unique across
     // applications, so an existing file is a REAL conflict and the
     // rename below fails loudly instead of silently clobbering it
@@ -411,8 +412,7 @@ final class ArrowIpcDataWriter(schema: StructType, path: String,
 
   override def abort(): Unit = {
     try if (out != null) out.close() catch { case _: Throwable => () }
-    val fs = FileSystem.get(tmpPath.toUri,
-      new org.apache.hadoop.conf.Configuration())
+    val fs = HadoopFiles.fs(tmpPath)
     fs.delete(tmpPath, false)
     ()
   }

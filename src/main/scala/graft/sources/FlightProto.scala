@@ -400,6 +400,18 @@ object FlightProto {
       ByteBuffer.wrap(m.metadata).order(ByteOrder.LITTLE_ENDIAN))
       .headerType() == org.apache.arrow.flatbuf.MessageHeader.Schema
 
+  /** Rows a message stream carries: the sum of its RecordBatch headers'
+    * `length` — the row count a reader of the decoded batches sees,
+    * read from the headers alone (no body is touched). */
+  def rowCount(msgs: Seq[IpcMessage]): Long = msgs.iterator.map { m =>
+    val fb = org.apache.arrow.flatbuf.Message.getRootAsMessage(
+      ByteBuffer.wrap(m.metadata).order(ByteOrder.LITTLE_ENDIAN))
+    if (fb.headerType() != org.apache.arrow.flatbuf.MessageHeader.RecordBatch)
+      0L
+    else fb.header(new org.apache.arrow.flatbuf.RecordBatch())
+      .asInstanceOf[org.apache.arrow.flatbuf.RecordBatch].length()
+  }.sum
+
   /** Regroup a flat FlightData-message sequence into self-contained
     * per-partition IPC streams: each Schema header starts a new stream
     * (Flight's stream framing — the schema message leads every stream). */

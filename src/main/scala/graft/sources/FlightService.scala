@@ -266,11 +266,13 @@ final class FlightService(val spark: SparkSession) {
     }
   }
 
+  /** Open a staged file through [[HadoopFiles]]: every staged DoGet
+    * starts here, so the Hadoop defaults are parsed once per JVM rather
+    * than once per open, and the read still verifies the file's `.crc`
+    * (a corrupted staged file fails its DoGet). */
   private def openLocalFile(file: String): java.io.InputStream = {
     val p = new org.apache.hadoop.fs.Path(file)
-    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri,
-      new org.apache.hadoop.conf.Configuration())
-    fs.open(p)
+    HadoopFiles.fs(p).open(p)
   }
 
   // ------------------------- streaming append log (readStream ingest)
@@ -285,8 +287,9 @@ final class FlightService(val spark: SparkSession) {
   private val appendLog = TrieMap.empty[String, Vector[Seq[String]]]
   private val appendSchemaDdl = TrieMap.empty[String, String]
 
-  /** Append one batch to `name`'s log; returns the row count. The first
-    * append fixes the log's schema; later appends must match. */
+  /** Append one batch to `name`'s log; returns the row count (from the
+    * batch headers). The first append fixes the log's schema; later
+    * appends must match. */
   def appendFlightData(name: String,
                        msgs: Seq[FlightProto.IpcMessage]): Long =
     synchronized {
@@ -302,7 +305,7 @@ final class FlightService(val spark: SparkSession) {
       val files = ArrowIpcSource.listFiles(dir.getAbsolutePath)
       appendLog.put(name, appendLog.getOrElse(name, Vector.empty) :+ files)
       appendSchemaDdl.put(name, schema.toDDL)
-      df.count()
+      FlightProto.rowCount(msgs)
     }
 
   /** Current log length (the streaming source's latestOffset). */
@@ -405,12 +408,13 @@ final class FlightService(val spark: SparkSession) {
   }
 
   /** acceptPut: a FlightData message stream ingests as flight `name`;
-    * returns the row count. */
+    * returns the row count, read from the batch headers — the eager
+    * checkpoint already decoded every row, so no second Spark action. */
   def ingestFlightData(name: String,
                        msgs: Seq[FlightProto.IpcMessage]): Long = {
-    val df = materialize(msgs)
-    register(name, df) // invalidates any staging of the PREVIOUS upload
-    df.count()
+    // registering invalidates any staging of the PREVIOUS upload
+    register(name, materialize(msgs))
+    FlightProto.rowCount(msgs)
   }
 
   /** DoExchange — the BIDIRECTIONAL verb the reference never had (its
@@ -436,14 +440,16 @@ final class FlightService(val spark: SparkSession) {
     * descriptor-as-command convention. The message family is recognized
     * by its own key vocabulary (source_field ⇒ rels). Field names from
     * the message rename to the canonical columns, and the graph
-    * registers once both halves have arrived. Returns row count. */
+    * registers once both halves have arrived. Returns the row count,
+    * from the batch headers. */
   def putGraphPart(frames: Seq[FlightProto.FlightData]): Long = {
     val desc = frames.headOption.flatMap(_.descriptor)
       .getOrElse(throw new IllegalArgumentException(
         "first FlightData must carry a descriptor"))
     Predef.require(desc.dtype == FlightProto.DescriptorType.Cmd,
       "descriptor must be CMD (a serialized write message)")
-    val df = materialize(ipcMessages(frames))
+    val msgs = ipcMessages(frames)
+    val df = materialize(msgs)
     // the CMD is either the write message itself or a serialized Ticket
     // from a prior gds.write.* action (the reference client's flow)
     val cmdBytes = resolveWriteCmd(desc.cmd)
@@ -468,7 +474,7 @@ final class FlightService(val spark: SparkSession) {
       }
     if (isRels) stageGraphPart(graphName, None, Some(canon))
     else stageGraphPart(graphName, Some(canon), None)
-    canon.count()
+    FlightProto.rowCount(msgs)
   }
 
   /** listActions (Producer.java:543-550). */

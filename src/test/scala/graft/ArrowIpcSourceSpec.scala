@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +12,7 @@ class ArrowIpcSourceSpec extends AnyFunSuite {
   private val format = classOf[ArrowIpcSource].getName
 
   test("DSv2 source reads back IPC files with schema inference") {
-    val dir = Files.createTempDirectory("graft_ipc_src").toString
+    val dir = TestSpark.tmpDir("graft_ipc_src").toString
     val df = Seq(
       (1L, "ann", 2.5, Seq(1.0f, 2.0f)),
       (2L, "bob", -0.5, Seq(3.0f)),
@@ -32,7 +30,7 @@ class ArrowIpcSourceSpec extends AnyFunSuite {
   }
 
   test("source composes with SQL: filter + aggregate over the DSv2 scan") {
-    val dir = Files.createTempDirectory("graft_ipc_sql").toString
+    val dir = TestSpark.tmpDir("graft_ipc_sql").toString
     val nodes = SparkEntry.graph(spark, "/root/testdata/sf0.001").nodeScan()
       .select(col("ID").as("id"), element_at(col("LABELS"), 1).as("label"))
     ArrowIpc.writeIpcFiles(nodes.repartition(3), dir)
@@ -43,7 +41,7 @@ class ArrowIpcSourceSpec extends AnyFunSuite {
   }
 
   test("fixed-size-list files read back via DSv2 as plain array columns") {
-    val dir = Files.createTempDirectory("graft_ipc_fsl").toString
+    val dir = TestSpark.tmpDir("graft_ipc_fsl").toString
     val df = Seq((1L, Seq(1.0f, 2.0f, 3.0f)), (2L, Seq(4.0f, 5.0f, 6.0f)))
       .toDF("id", "embedding").repartition(2)
     ArrowIpc.writeIpcFiles(df, dir, fixedSizeArrays = true)
@@ -55,7 +53,7 @@ class ArrowIpcSourceSpec extends AnyFunSuite {
   test("multi-batch file streams to the filesystem and reads back whole") {
     // 2500 rows / batchSize 512 -> 5 record batches in ONE file, written
     // batch-by-batch (never a whole-partition blob on heap)
-    val dir = Files.createTempDirectory("graft_ipc_multi").toString
+    val dir = TestSpark.tmpDir("graft_ipc_multi").toString
     val df = spark.range(2500)
       .select(col("id"), array(col("id").cast("int")).as("xs")).coalesce(1)
     ArrowIpc.writeIpcFiles(df, dir, batchSize = 512)
@@ -78,7 +76,7 @@ class ArrowIpcSourceSpec extends AnyFunSuite {
 
   test("DSv2 write path: append + overwrite round-trip with commit " +
       "protocol (_SUCCESS, no temp leftovers, per-file parallelism)") {
-    val dir = Files.createTempDirectory("graft_ipc_write").toString
+    val dir = TestSpark.tmpDir("graft_ipc_write").toString
     val df = (0L until 500L)
       .map(i => (i, s"n$i", i * 0.5, Seq(i.toFloat, (i + 1).toFloat)))
       .toDF("id", "name", "score", "vec")
@@ -106,7 +104,7 @@ class ArrowIpcSourceSpec extends AnyFunSuite {
   }
 
   test("DSv2 write skips empty partitions and readers ignore temp files") {
-    val dir = Files.createTempDirectory("graft_ipc_write_empty").toString
+    val dir = TestSpark.tmpDir("graft_ipc_write_empty").toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     // 8 partitions, only a few non-empty -> only those produce files
     df.repartition(8).write.format(format).mode("append").save(dir)
@@ -123,12 +121,12 @@ class ArrowIpcSourceSpec extends AnyFunSuite {
   test("empty directory reads as an empty 0-column table (fresh write " +
       "targets must stay resolvable and plannable); files vanishing " +
       "after inference still fail loudly") {
-    val dir = Files.createTempDirectory("graft_ipc_empty").toString
+    val dir = TestSpark.tmpDir("graft_ipc_empty").toString
     val df = spark.read.format(format).load(dir)
     assert(df.schema.isEmpty && df.count() == 0L)
     // inference saw files, then they vanish -> planning must not
     // silently return an empty result
-    val dir2 = Files.createTempDirectory("graft_ipc_vanish").toString
+    val dir2 = TestSpark.tmpDir("graft_ipc_vanish").toString
     ArrowIpc.writeIpcFiles(Seq((1L, "a")).toDF("id", "v").coalesce(1), dir2)
     val df2 = spark.read.format(format).load(dir2)
     new java.io.File(dir2).listFiles.foreach(_.delete())

@@ -11,7 +11,7 @@ class CsvGraphImportSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def writeCsv(lines: Seq[String]): String = {
-    val f = Files.createTempFile("graft_csv", ".csv")
+    val f = TestSpark.tmpFile("graft_csv", ".csv")
     Files.writeString(f, lines.mkString("\n"))
     f.toString
   }

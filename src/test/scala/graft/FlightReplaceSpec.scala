@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{ArrowIpc, FlightProto, FlightService}
@@ -35,6 +33,14 @@ class FlightReplaceSpec extends AnyFunSuite {
     localDirOf(files.head)
   }
 
+  /** A fresh service with retire grace `graceMs`; its staged and
+    * spilled files are deleted when `f` returns. */
+  private def withService(graceMs: Long)(f: FlightService => Unit): Unit = {
+    val svc = new FlightService(spark)
+    svc.retireGraceMs = graceMs
+    try f(svc) finally svc.cleanupStaging()
+  }
+
   private def stagedValues(svc: FlightService, name: String): Set[Long] =
     spark.read.format(classOf[graft.sources.ArrowIpcSource].getName)
       .load(stagedDir(svc, name).getAbsolutePath)
@@ -43,58 +49,58 @@ class FlightReplaceSpec extends AnyFunSuite {
   test("re-ingesting a flight name invalidates its staged partitions: " +
     "partitioned readers see the SECOND upload's rows, and the first " +
     "upload's stage dir is reclaimed at grace=0") {
-    val svc = new FlightService(spark)
-    svc.retireGraceMs = 0L
-    val df1 = Seq(1L, 2L, 3L).toDF("v")
-    val df2 = Seq(10L, 20L).toDF("v")
-    svc.ingestFlightData("replace_me", msgsOf(df1))
-    val dir1 = stagedDir(svc, "replace_me")
-    assert(dir1.exists(), s"stage dir derivation broken: $dir1")
-    assert(stagedValues(svc, "replace_me") == Set(1L, 2L, 3L))
-    // the regression: ingest paths that tables.put() without register()
-    // leave `staged` pointing at the first upload's files
-    svc.ingestFlightData("replace_me", msgsOf(df2))
-    assert(stagedValues(svc, "replace_me") == Set(10L, 20L),
-      "partitioned read served the REPLACED upload's rows")
-    assert(!dir1.exists(),
-      s"replaced stage dir survived grace=0 retirement: $dir1")
+    withService(0L) { svc =>
+      val df1 = Seq(1L, 2L, 3L).toDF("v")
+      val df2 = Seq(10L, 20L).toDF("v")
+      svc.ingestFlightData("replace_me", msgsOf(df1))
+      val dir1 = stagedDir(svc, "replace_me")
+      assert(dir1.exists(), s"stage dir derivation broken: $dir1")
+      assert(stagedValues(svc, "replace_me") == Set(1L, 2L, 3L))
+      // the regression: ingest paths that tables.put() without register()
+      // leave `staged` pointing at the first upload's files
+      svc.ingestFlightData("replace_me", msgsOf(df2))
+      assert(stagedValues(svc, "replace_me") == Set(10L, 20L),
+        "partitioned read served the REPLACED upload's rows")
+      assert(!dir1.exists(),
+        s"replaced stage dir survived grace=0 retirement: $dir1")
+    }
   }
 
   test("a replaced spill-backed put retires the old spill dir at " +
     "grace=0; the new dir keeps serving") {
-    val svc = new FlightService(spark)
-    svc.retireGraceMs = 0L
-    val df1 = Seq(1L, 2L, 3L).toDF("v")
-    val df2 = Seq(10L, 20L).toDF("v")
-    val dir1 = Files.createTempDirectory("graft_replace_spill1_").toFile
-    val dir2 = Files.createTempDirectory("graft_replace_spill2_").toFile
-    ArrowIpc.writeIpcFiles(df1, dir1.getAbsolutePath)
-    ArrowIpc.writeIpcFiles(df2, dir2.getAbsolutePath)
-    val desc = FlightProto.FlightDescriptor.path("spilled_replace")
-    // nullable DDL: the wire schema a real put carries is nullable, and
-    // the DSv2 reader checks file-vs-table schema nullability-sensitively
-    assert(svc.ingestSpilledPut(desc, dir1, "v BIGINT") == 3L)
-    assert(svc.ingestSpilledPut(desc, dir2, "v BIGINT") == 2L)
-    assert(!dir1.exists(), s"replaced spill dir survived: $dir1")
-    assert(dir2.exists(), "the LIVE registration's spill dir was deleted")
-    assert(svc.require("spilled_replace")
-      .select("v").as[Long].collect().toSet == Set(10L, 20L))
+    withService(0L) { svc =>
+      val df1 = Seq(1L, 2L, 3L).toDF("v")
+      val df2 = Seq(10L, 20L).toDF("v")
+      val dir1 = TestSpark.tmpDir("graft_replace_spill1_").toFile
+      val dir2 = TestSpark.tmpDir("graft_replace_spill2_").toFile
+      ArrowIpc.writeIpcFiles(df1, dir1.getAbsolutePath)
+      ArrowIpc.writeIpcFiles(df2, dir2.getAbsolutePath)
+      val desc = FlightProto.FlightDescriptor.path("spilled_replace")
+      // nullable DDL: the wire schema a real put carries is nullable, and
+      // the DSv2 reader checks file-vs-table schema nullability-sensitively
+      assert(svc.ingestSpilledPut(desc, dir1, "v BIGINT") == 3L)
+      assert(svc.ingestSpilledPut(desc, dir2, "v BIGINT") == 2L)
+      assert(!dir1.exists(), s"replaced spill dir survived: $dir1")
+      assert(dir2.exists(), "the LIVE registration's spill dir was deleted")
+      assert(svc.require("spilled_replace")
+        .select("v").as[Long].collect().toSet == Set(10L, 20L))
+    }
   }
 
   test("grace > 0 delays reclamation: the old dir survives the replace " +
     "instant (an in-flight reader's window) and is deleted afterwards") {
-    val svc = new FlightService(spark)
-    svc.retireGraceMs = 300L
-    val df1 = Seq(1L).toDF("v")
-    val df2 = Seq(2L).toDF("v")
-    svc.register("graced", df1)
-    val dir1 = stagedDir(svc, "graced")
-    assert(dir1.exists(), s"stage dir derivation broken: $dir1")
-    svc.register("graced", df2)
-    assert(dir1.exists(), "retirement ignored the grace window")
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (dir1.exists() && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(!dir1.exists(), s"graced dir never reclaimed: $dir1")
+    withService(300L) { svc =>
+      val df1 = Seq(1L).toDF("v")
+      val df2 = Seq(2L).toDF("v")
+      svc.register("graced", df1)
+      val dir1 = stagedDir(svc, "graced")
+      assert(dir1.exists(), s"stage dir derivation broken: $dir1")
+      svc.register("graced", df2)
+      assert(dir1.exists(), "retirement ignored the grace window")
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (dir1.exists() && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(!dir1.exists(), s"graced dir never reclaimed: $dir1")
+    }
   }
 }

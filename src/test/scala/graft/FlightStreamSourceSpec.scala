@@ -28,11 +28,8 @@ class FlightStreamSourceSpec extends AnyFunSuite {
       .option("token", "sekrit").option("flight", flight)
       .load()
 
-  private def tmpDir(tag: String): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory(s"graft_fss_$tag").toFile
-    d.getAbsolutePath
-  }
+  private def tmpDir(tag: String): String =
+    TestSpark.tmpDir(s"graft_fss_$tag").toString
 
   test("appended batches arrive as micro-batches; aggregate state spans " +
       "them (complete mode)") {

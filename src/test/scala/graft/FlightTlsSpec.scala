@@ -33,7 +33,7 @@ class FlightTlsSpec extends AnyFunSuite {
   /** keytool -genkeypair into a PKCS12 keystore + exported-cert
     * truststore; returns (keystore, truststore). */
   private lazy val stores: (Path, Path) = {
-    val dir = Files.createTempDirectory("flight-tls")
+    val dir = TestSpark.tmpDir("flight-tls")
     val ks = dir.resolve("server.p12")
     val cert = dir.resolve("server.cer")
     val ts = dir.resolve("trust.p12")
@@ -90,7 +90,7 @@ class FlightTlsSpec extends AnyFunSuite {
       "TLS handshake (pinned trust verifies)") {
     withTlsServer { srv =>
       // an empty truststore: valid PKCS12, trusts nothing
-      val empty = Files.createTempFile("empty-trust", ".p12")
+      val empty = TestSpark.tmpFile("empty-trust", ".p12")
       val ks = java.security.KeyStore.getInstance("PKCS12")
       ks.load(null, pass.toCharArray)
       val out = Files.newOutputStream(empty)

@@ -84,6 +84,64 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(typed == 1L)
   }
 
+  /** relScan's previous melt — `filter(pairs, lambda)`, a `CASE WHEN
+    * size(…)` fallback and `explode` — as the oracle for the generated
+    * one. */
+  private def lambdaMelt(rs: org.apache.spark.sql.DataFrame,
+                         wanted: Seq[String]) = {
+    val pairs = array(wanted.map(p =>
+      struct(lit(p).as("property"), col(p).cast("double").as("value"))): _*)
+    val present = filter(pairs, s => s.getField("value").isNotNull)
+    val withFallback = when(size(present) > 0, present).otherwise(
+      array(struct(lit(null.asInstanceOf[String]).as("property"),
+        lit(null).cast("double").as("value"))))
+    rs.select(col("START_ID"), col("END_ID"), col("TYPE"),
+        explode(withFallback).as("pv"))
+      .select(col("START_ID"), col("END_ID"), col("TYPE"),
+        col("pv.property").as("property"), col("pv.value").as("value"))
+  }
+
+  test("rel scan melt equals the lambda melt on mixed, all-null and no " +
+      "properties, and plans no lambda") {
+    val rnd = new scala.util.Random(31)
+    def maybe(p: Double): Option[Double] =
+      if (rnd.nextDouble() < p) None else Some(rnd.nextInt(50) / 4.0)
+    // mixed nulls, including rels whose every property is null
+    val mixed = (Seq((1L, 3L, "BLOCKS", None: Option[Double],
+        None: Option[Double], None: Option[Long])) ++
+      (1 to 400).map(i => (i.toLong, (i * 7 % 97).toLong,
+        if (i % 3 == 0) "BLOCKS" else "FOLLOWS", maybe(0.5), maybe(0.6),
+        maybe(0.4).map(_.toLong))))
+      .toDF("START_ID", "END_ID", "TYPE", "weight", "cost", "hops")
+    val cases = Seq(
+      (mixed, Nil, Seq("weight", "cost", "hops")),
+      (mixed, Seq("FOLLOWS"), Seq("cost")),
+      (mixed, Nil, Seq("hops", "weight")))
+    cases.foreach { case (rs, types, wanted) =>
+      val got = GraphRef(nodes, rs).relScan(props = wanted, types = types)
+      val filtered =
+        if (types.isEmpty) rs else rs.where(col("TYPE").isin(types: _*))
+      val want = lambdaMelt(filtered, wanted)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        want.schema.map(f => (f.name, f.dataType)))
+      assert(got.count() == want.count())
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"melts differ for props=$wanted types=$types")
+      assert(!got.queryExecution.executedPlan.toString.contains("lambda"))
+      assert(want.queryExecution.executedPlan.toString.contains("lambda"),
+        "the lambda probe no longer sees a higher-order function")
+    }
+    // no properties at all: one (null, null) row per relationship
+    val bare = mixed.select("START_ID", "END_ID", "TYPE")
+    val none = GraphRef(nodes, bare).relScan()
+    assert(none.columns.toSeq ==
+      Seq("START_ID", "END_ID", "TYPE", "property", "value"))
+    assert(none.count() == bare.count())
+    assert(none.where(col("property").isNotNull || col("value").isNotNull)
+      .isEmpty)
+    assert(none.select("START_ID", "END_ID", "TYPE").exceptAll(bare).isEmpty)
+  }
+
   test("adjacency: sorted targets and degrees") {
     val bigger = GraphRef(nodes, rels.unionByName(
       Seq((1L, 9L, "FOLLOWS", None: Option[Double], None: Option[Double]))
@@ -147,7 +205,7 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("bulk import round-trips the graph through partitioned parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_db").toString
+    val dir = TestSpark.tmpDir("graft_db").toString
     val back = GraphCatalog.bulkImport(nodes, rels, dir)
     assert(back.nodes.count() == 3 && back.rels.count() == 3)
     // partition pruning on TYPE: reading one type touches one partition dir

@@ -159,8 +159,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("schema evolution read: old generation null-fills new columns") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_evo_spec").toString
+    val base = TestSpark.tmpDir("graft_evo_spec").toString
     Seq((1L, "en")).toDF("id", "lang").write.parquet(s"$base/gen=1")
     Seq((2L, "de", 42L)).toDF("id", "lang", "extra")
       .write.parquet(s"$base/gen=2")

@@ -174,10 +174,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch ingest appends micro-batches to the bulk store") {
-    import java.nio.file.Files
     implicit val sql = spark.sqlContext
-    val db = Files.createTempDirectory("graft_bulk").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val db = TestSpark.tmpDir("graft_bulk").toString
+    val ckpt = TestSpark.tmpDir("graft_ckpt").toString
     val in = MemoryStream[StreamEv]
     val q = EventStreams.ingestToBulkStore(in.toDF(), db, ckpt)
     try {
@@ -197,9 +196,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("incremental changelog: tombstones defeat late older records") {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions.col
-    val base = Files.createTempDirectory("graft_cdc").toString
+    val base = TestSpark.tmpDir("graft_cdc").toString
     // file 1: key 1 up@10; key 2 up@11 then DELETED @30
     // file 2: key 2 LATE OLDER up@20 (must stay deleted); key 1 up@40
     Seq((1L, 10L, "up", 1.0), (2L, 11L, "up", 2.0), (2L, 30L, "del", 0.0))
@@ -307,8 +305,7 @@ class StreamingSpec extends AnyFunSuite {
   test("latestVersionBefore skips an orphan same-batch version dir") {
     // the retry scenario itself: v0 committed, v1 written but its
     // checkpoint commit lost — the re-run of batch 1 must read v0
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_lvb_").toString
+    val base = TestSpark.tmpDir("graft_lvb_").toString
     try {
       new java.io.File(s"$base/v0").mkdirs()
       new java.io.File(s"$base/v1").mkdirs()
@@ -440,7 +437,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("file-stream hourly counts on real events match the batch twin") {
     import java.nio.file.{Files, Paths}
-    val src = Files.createTempDirectory("graft_stream_src")
+    val src = TestSpark.tmpDir("graft_stream_src")
     Files.copy(Paths.get("/root/testdata/sf0.001/events.parquet"),
       src.resolve("events.parquet"))
     val batch = graft.sources.TpchGraph.table(spark,

@@ -17,7 +17,7 @@ class TpchGraphSpec extends AnyFunSuite {
   }
 
   test("table() re-infers the schema after an in-place part overwrite") {
-    val sf = Files.createTempDirectory("graft_schema_memo")
+    val sf = TestSpark.tmpDir("graft_schema_memo")
     val dir = sf.resolve("t.parquet")
     Seq((1L, "a")).toDF("x", "y").coalesce(1)
       .write.parquet(dir.toString)
