@@ -46,19 +46,22 @@ object QueriesScale {
     // tolerate concurrent sweeps (r5's one red row was exactly such a
     // race on a shared staging path).
     "bucket_join" -> ((s, dir) => {
-      s.sql("CREATE DATABASE IF NOT EXISTS graft_bkt " +
-        s"LOCATION '${StageFiles.tmp("graft_warehouse")}'")
+      // a per-run database at a per-run location, both dropped once the
+      // gate's result is materialized, so no warehouse dir outlives it
       val tok = s"${san(dir)}_${System.nanoTime()}"
+      val db = s"graft_bkt_$tok"
+      val wh = StageFiles.dir("warehouse", dir)
+      s.sql(s"CREATE DATABASE $db LOCATION '$wh'")
       val o = table(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"))
       val l = table(s, dir, "lineitem")
         .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-      Bucketing.writeBucketed(o, s"graft_bkt.orders_$tok", "o_orderkey", 8)
-      Bucketing.writeBucketed(l, s"graft_bkt.lineitem_$tok", "o_orderkey", 8)
-      try
+      try {
+        Bucketing.writeBucketed(o, s"$db.orders", "o_orderkey", 8)
+        Bucketing.writeBucketed(l, s"$db.lineitem", "o_orderkey", 8)
         withConf(s, "spark.sql.autoBroadcastJoinThreshold", "-1") {
-          val j = Bucketing.colocatedJoin(s, s"graft_bkt.orders_$tok",
-            s"graft_bkt.lineitem_$tok", "o_orderkey")
+          val j = Bucketing.colocatedJoin(s, s"$db.orders", s"$db.lineitem",
+            "o_orderkey")
           val plan = j.queryExecution.executedPlan.toString
           require(!plan.contains("Exchange"),
             s"bucketed join must not shuffle:\n$plan")
@@ -68,9 +71,9 @@ object QueriesScale {
               sum(col("l_quantity").cast("long")).as("sum_qty"))
             .localCheckpoint(true)
         }
-      finally {
-        s.sql(s"DROP TABLE IF EXISTS graft_bkt.orders_$tok")
-        s.sql(s"DROP TABLE IF EXISTS graft_bkt.lineitem_$tok")
+      } finally {
+        s.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+        StageFiles.rm(wh)
       }
     }),
 

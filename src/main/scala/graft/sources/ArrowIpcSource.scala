@@ -5,36 +5,41 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.{BigIntVector, FieldVector, Float4Vector, Float8Vector, IntVector, VarCharVector}
-import org.apache.arrow.vector.complex.{FixedSizeListVector, ListVector}
 import org.apache.arrow.vector.ipc.ArrowStreamReader
 import org.apache.arrow.vector.types.FloatingPointPrecision
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** DataSource V2 reader for Arrow IPC stream files — the "custom
-  * DataSource" form of the reference's Arrow data plane:
+/** DataSource V2 reader and writer for Arrow IPC stream files — the
+  * "custom DataSource" form of the reference's Arrow data plane:
   * `spark.read.format("graft.sources.ArrowIpcSource").load(dir)` turns a
-  * directory of IPC streams (e.g. written by [[ArrowIpc.toIpcStreams]])
+  * directory of IPC streams (e.g. written by [[ArrowIpc.writeIpcFiles]])
   * into a DataFrame. One input partition per file, so a directory written
   * by N partitions reads back with N-way parallelism and no driver-side
   * materialization.
+  *
+  * Both directions go through [[ArrowIpc]]'s one codec: the scan is
+  * columnar — each file's record batches are served as the
+  * `ColumnarBatch`es of Spark's `ArrowColumnVector` (plus graft's
+  * FixedSizeList vector) — and the writer feeds the plan's
+  * `InternalRow`s to Spark's `ArrowWriter`. This object keeps only what
+  * Spark lacks: the Arrow → Spark schema mapping ([[sparkSchema]]),
+  * because Spark's `ArrowUtils` has no FixedSizeList, the reference's
+  * frozen embedding envelope.
   *
   * Schema is inferred from the FIRST stream's header — the exact contract
   * the reference uses (schema derived from the first record / carried in
   * the put-stream: CypherActionHandler.java:72-149, BulkImportJob.java:
   * 49-51); every other file is validated against it at read time. Type
   * envelope as §1.2: int32/int64/float32/float64/utf8 and lists of
-  * int64/float32/float64/utf8.
+  * them, List or FixedSizeList.
   *
   * Every listing, open, create, rename and delete here goes through
   * [[HadoopFiles]]: one Hadoop config parse per JVM instead of one per
@@ -120,30 +125,6 @@ object ArrowIpcSource {
   private[sources] def sparkSchema(
       s: org.apache.arrow.vector.types.pojo.Schema): StructType =
     StructType(s.getFields.asScala.map(sparkField).toSeq)
-
-  /** Arrow vector cell → Catalyst value (shared by every partition reader
-    * over this envelope: IPC files, Flight endpoints). */
-  private[sources] def readCatalyst(v: FieldVector, i: Int): Any = {
-    if (v.isNull(i)) null
-    else v match {
-      case iv: IntVector => iv.get(i)
-      case bv: BigIntVector => bv.get(i)
-      case fv: Float4Vector => fv.get(i)
-      case dv: Float8Vector => dv.get(i)
-      case sv: VarCharVector => UTF8String.fromBytes(sv.get(i))
-      case lv: ListVector =>
-        val child = lv.getDataVector.asInstanceOf[FieldVector]
-        new GenericArrayData(
-          (lv.getElementStartIndex(i) until lv.getElementEndIndex(i))
-            .map(j => readCatalyst(child, j)).toArray)
-      case flv: FixedSizeListVector =>
-        val child = flv.getDataVector.asInstanceOf[FieldVector]
-        new GenericArrayData(
-          (flv.getElementStartIndex(i) until flv.getElementEndIndex(i))
-            .map(j => readCatalyst(child, j)).toArray)
-      case other => throw new IllegalStateException(s"vector $other")
-    }
-  }
 }
 
 final class ArrowIpcTable(schema: StructType, path: String)
@@ -183,59 +164,24 @@ final class ArrowIpcScan(schema: StructType, path: String) extends Scan
 
 final case class ArrowIpcFilePartition(file: String) extends InputPartition
 
+/** Columnar: each file's record batches are served as they load. */
 final class ArrowIpcReaderFactory(schema: StructType)
     extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    true
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[ColumnarBatch] = {
+    val file = partition.asInstanceOf[ArrowIpcFilePartition].file
+    val p = new Path(file)
+    new ArrowIpc.BatchReader(HadoopFiles.fs(p).open(p), { root =>
+      require(ArrowIpcSource.sparkSchema(root.getSchema) == schema,
+        s"stream schema of $file does not match the inferred table schema")
+      root.getFieldVectors.asScala.toSeq
+    })
+  }
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] =
-    new ArrowIpcPartitionReader(
-      partition.asInstanceOf[ArrowIpcFilePartition].file, schema)
-}
-
-/** Streams one IPC file batch-by-batch into InternalRows. */
-final class ArrowIpcPartitionReader(file: String, schema: StructType)
-    extends PartitionReader[InternalRow] {
-
-  private val allocator = new RootAllocator(Long.MaxValue)
-  private val in = {
-    val p = new Path(file)
-    HadoopFiles.fs(p).open(p)
-  }
-  private val reader = new ArrowStreamReader(in, allocator)
-  private val root = {
-    val r = reader.getVectorSchemaRoot
-    require(ArrowIpcSource.sparkSchema(r.getSchema) == schema,
-      s"stream schema of $file does not match the inferred table schema")
-    r
-  }
-  private var rowInBatch = 0
-  private var batchRows = 0
-
-  override def next(): Boolean = {
-    if (rowInBatch < batchRows) true
-    else if (reader.loadNextBatch()) {
-      batchRows = root.getRowCount
-      rowInBatch = 0
-      batchRows > 0 || next()
-    } else false
-  }
-
-  override def get(): InternalRow = {
-    val vectors = root.getFieldVectors
-    val values = new Array[Any](vectors.size())
-    var c = 0
-    while (c < vectors.size()) {
-      values(c) = ArrowIpcSource.readCatalyst(vectors.get(c), rowInBatch)
-      c += 1
-    }
-    rowInBatch += 1
-    new GenericInternalRow(values)
-  }
-
-  override def close(): Unit = {
-    reader.close()
-    allocator.close()
-    in.close()
-  }
+    throw new UnsupportedOperationException("Arrow IPC scans are columnar")
 }
 
 // ---------------------------------------------------------------- write
@@ -353,53 +299,25 @@ final class ArrowIpcDataWriter(schema: StructType, path: String,
     new Path(path, f".part-$partitionId%05d-$jobToken-$taskId.arrows.tmp")
   private val finalPath =
     new Path(path, f"part-$partitionId%05d-$jobToken-$taskId.arrows")
-  private val deser = org.apache.spark.sql.catalyst.encoders
-    .ExpressionEncoder(schema).resolveAndBind().createDeserializer()
 
-  private var allocator: RootAllocator = _
-  private var root: org.apache.arrow.vector.VectorSchemaRoot = _
-  private var writer: org.apache.arrow.vector.ipc.ArrowStreamWriter = _
   private var out: org.apache.hadoop.fs.FSDataOutputStream = _
-  private var vectors: Array[FieldVector] = _
-  private var n = 0
-
-  private def open(): Unit = {
-    val fs = HadoopFiles.fs(tmpPath)
-    fs.mkdirs(new Path(path))
-    out = fs.create(tmpPath, true)
-    allocator = new RootAllocator(Long.MaxValue)
-    root = org.apache.arrow.vector.VectorSchemaRoot.create(
-      ArrowIpc.arrowSchema(schema), allocator)
-    writer = new org.apache.arrow.vector.ipc.ArrowStreamWriter(
-      root, null, out)
-    writer.start()
-    vectors = root.getFieldVectors.asScala.toArray
-  }
-
-  private def flush(): Unit = if (n > 0) {
-    root.setRowCount(n)
-    writer.writeBatch()
-    root.allocateNew()
-    n = 0
-  }
+  private var enc: ArrowIpc.StreamEncoder = _
 
   override def write(record: InternalRow): Unit = {
-    if (writer == null) open()
-    val row = deser(record)
-    var c = 0
-    while (c < vectors.length) {
-      ArrowIpc.appendCell(vectors(c), n, row, c, schema.fields(c).dataType)
-      c += 1
+    if (enc == null) {
+      val fs = HadoopFiles.fs(tmpPath)
+      fs.mkdirs(new Path(path))
+      out = fs.create(tmpPath, true)
+      enc = new ArrowIpc.StreamEncoder(schema, Map.empty,
+        ArrowIpc.DefaultBatchSize, out)
     }
-    n += 1
-    if (n >= ArrowIpc.DefaultBatchSize) flush()
+    enc.write(record)
   }
 
   override def commit()
       : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    if (writer == null) return ArrowIpcCommitMessage("")
-    flush()
-    writer.end()
+    if (enc == null) return ArrowIpcCommitMessage("")
+    enc.finish()
     out.close()
     val fs = HadoopFiles.fs(tmpPath)
     // no delete(finalPath): the job token makes the name unique across
@@ -417,8 +335,5 @@ final class ArrowIpcDataWriter(schema: StructType, path: String,
     ()
   }
 
-  override def close(): Unit = {
-    if (root != null) root.close()
-    if (allocator != null) allocator.close()
-  }
+  override def close(): Unit = if (enc != null) enc.close()
 }

@@ -5,6 +5,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{CompletableFuture, ExecutionException, Executors, ThreadFactory, TimeUnit}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import io.netty.bootstrap.{Bootstrap, ServerBootstrap}
@@ -218,26 +219,12 @@ object FlightGrpc {
     }
   }
 
-  /** FlightData messages for a DataFrame, Flight-shaped: ONE leading
-    * Schema message, then every partition's record batches (partition
-    * streams after the first drop their redundant Schema headers — a
-    * Flight getStream is a single logical Arrow stream). */
+  /** FlightData messages for a DataFrame as one logical Flight stream
+    * ([[FlightProto.logicalStream]]). */
   private def flightDataMessages(df: DataFrame)
-      : Iterator[FlightProto.IpcMessage] = {
-    val it = ArrowIpc.toIpcStreams(df).toLocalIterator()
-    var firstPartition = true
-    new Iterator[Array[Byte]] {
-      def hasNext: Boolean = it.hasNext
-      def next(): Array[Byte] = it.next()
-    }.flatMap { blob =>
-      val msgs = FlightProto.splitIpcStream(blob)
-      val keep =
-        if (firstPartition) msgs
-        else msgs.filterNot(FlightProto.isSchemaMessage)
-      firstPartition = false
-      keep
-    }
-  }
+      : Iterator[FlightProto.IpcMessage] =
+    FlightProto.logicalStream(
+      ArrowIpc.toIpcStreams(df).toLocalIterator().asScala)
 
   // ------------------------------------------------------------- server
   final class Server(spark: SparkSession, token: String,
@@ -625,11 +612,14 @@ object FlightGrpc {
 
     private def rollSpillFile(): Unit = {
       if (spillOut != null) { spillOut.write(SpillEos); spillOut.close() }
-      val f = new java.io.File(spillDir, f"part-$spillFileIdx%05d.arrows")
+      // through the checksummed file system, so each file gets a `.crc`
+      // and a spill corrupted on disk fails its read instead of serving
+      val p = new org.apache.hadoop.fs.Path(
+        new java.io.File(spillDir, f"part-$spillFileIdx%05d.arrows").toURI)
       spillFileIdx += 1
       spillFileBytes = 0L
       spillOut = new java.io.BufferedOutputStream(
-        new java.io.FileOutputStream(f), 1 << 16)
+        HadoopFiles.fs(p).create(p, true), 1 << 16)
     }
 
     private def closeSpill(): Unit = {
@@ -1179,14 +1169,14 @@ object FlightGrpc {
       * (descriptor path ["append", name]) — the producer half of the
       * [[FlightStreamSource]] readStream surface. */
     def doPutAppend(name: String, df: DataFrame): Long =
-      // singleStream = false: the append log is a graft extension whose
-      // contract stages one file PER PRODUCER PARTITION (the streaming
-      // reader plans one task per file), so partition streams keep
-      // their Schema delimiters — only plain DoPut, which upstream
-      // servers also serve, uses the spec's single-stream shape
+      // keepSchemas: the append log is a graft extension whose contract
+      // stages one file PER PRODUCER PARTITION (the streaming reader
+      // plans one task per file), so partition streams keep their Schema
+      // delimiters — only plain DoPut, which upstream servers also
+      // serve, uses the spec's single-stream shape
       putFrames(FlightProto.FlightDescriptor(
         FlightProto.DescriptorType.Path, Array.emptyByteArray,
-        Seq("append", name)), df, singleStream = false)
+        Seq("append", name)), df, keepSchemas = true)
 
     /** gds.write.nodes / gds.write.relationships over DoPut: the CMD
       * descriptor carries the serialized write message. */
@@ -1194,45 +1184,25 @@ object FlightGrpc {
       putFrames(FlightProto.FlightDescriptor(
         FlightProto.DescriptorType.Cmd, cmd, Nil), df)
 
+    /** A DoPut streamed message by message, one partition's IPC stream
+      * in memory at a time — the client-side mirror of the server's
+      * spill ingest (never the whole upload as a frame list). */
     private def putFrames(desc: FlightProto.FlightDescriptor,
                           df: DataFrame,
-                          singleStream: Boolean = true): Long = {
-      // one partition's IPC stream in memory at a time, streamed out
-      // message-by-message — the client-side mirror of the server's
-      // spill ingest (never the whole upload as a frame list). A DoPut
-      // is ONE logical Arrow stream per the Flight spec, so partition
-      // streams after the first drop their redundant Schema headers
-      // (an upstream server rejects a mid-stream Schema; ours groups
-      // streams at Schema boundaries and handles both shapes).
-      val blobs = ArrowIpc.toIpcStreams(df).toLocalIterator()
-      var first = true
-      var sentSchema = false
-      val frames: Iterator[Array[Byte]] = new Iterator[Array[Byte]] {
-        private var queue: List[Array[Byte]] = Nil
-        private def refill(): Unit =
-          while (queue.isEmpty && blobs.hasNext) {
-            queue = FlightProto.splitIpcStream(blobs.next()).flatMap { m =>
-              if (singleStream && FlightProto.isSchemaMessage(m) &&
-                  sentSchema) None
-              else {
-                if (FlightProto.isSchemaMessage(m)) sentSchema = true
-                val fd = FlightProto.FlightData(
-                  if (first) Some(desc) else None,
-                  m.metadata, Array.emptyByteArray, m.body).encode
-                first = false
-                Some(fd)
-              }
-            }.toList
-          }
-        def hasNext: Boolean = { refill(); queue.nonEmpty }
-        def next(): Array[Byte] = {
-          refill()
-          val h = queue.head; queue = queue.tail; h
+                          keepSchemas: Boolean = false): Long =
+      FlightProto.PutResult.decode(callStreamingOk("DoPut",
+        frames(desc, df, keepSchemas)).head).asString.toLong
+
+    /** `df` as FlightData frames of one logical stream; the descriptor
+      * rides the first. */
+    private def frames(desc: FlightProto.FlightDescriptor, df: DataFrame,
+                       keepSchemas: Boolean = false): Iterator[Array[Byte]] =
+      FlightProto.logicalStream(
+          ArrowIpc.toIpcStreams(df).toLocalIterator().asScala, keepSchemas)
+        .zipWithIndex.map { case (m, i) =>
+          FlightProto.FlightData(if (i == 0) Some(desc) else None,
+            m.metadata, Array.emptyByteArray, m.body).encode
         }
-      }
-      FlightProto.PutResult.decode(
-        callStreamingOk("DoPut", frames).head).asString.toLong
-    }
 
     /** DoExchange: stream `df` up under a CMD CypherMessage descriptor
       * (the query sees the rows as view `input`), get the result streamed
@@ -1241,21 +1211,7 @@ object FlightGrpc {
                    df: DataFrame): DataFrame = {
       val desc = FlightProto.FlightDescriptor(
         FlightProto.DescriptorType.Cmd, msg.serialize, Nil)
-      val frames = Seq.newBuilder[Array[Byte]]
-      var first = true
-      var sentSchema = false
-      ArrowIpc.toIpcStreams(df).toLocalIterator().forEachRemaining { blob =>
-        FlightProto.splitIpcStream(blob).foreach { m =>
-          if (!(FlightProto.isSchemaMessage(m) && sentSchema)) {
-            if (FlightProto.isSchemaMessage(m)) sentSchema = true
-            frames += FlightProto.FlightData(
-              if (first) Some(desc) else None,
-              m.metadata, Array.emptyByteArray, m.body).encode
-            first = false
-          }
-        }
-      }
-      val msgs = callOk("DoExchange", frames.result())
+      val msgs = callOk("DoExchange", frames(desc, df).toSeq)
         .map(FlightProto.FlightData.decode)
         .map(fd => FlightProto.IpcMessage(fd.dataHeader, fd.dataBody))
       val schema = FlightService.sparkSchemaOfStream(msgs)

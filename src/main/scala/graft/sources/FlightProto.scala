@@ -412,6 +412,25 @@ object FlightProto {
       .asInstanceOf[org.apache.arrow.flatbuf.RecordBatch].length()
   }.sum
 
+  /** Per-partition IPC streams (as [[ArrowIpc.toIpcStreams]] emits) as
+    * ONE logical Flight stream: the first Schema message leads and the
+    * later partitions' Schema headers are dropped, since a Flight
+    * getStream or DoPut is a single Arrow stream (an upstream server
+    * rejects a mid-stream Schema). `keepSchemas` keeps every partition's
+    * header, for the append log, whose contract stages one file per
+    * producer partition. Lazy: one partition's messages at a time. */
+  def logicalStream(blobs: Iterator[Array[Byte]],
+                    keepSchemas: Boolean = false): Iterator[IpcMessage] = {
+    var sentSchema = false
+    blobs.flatMap(splitIpcStream).filter { m =>
+      !isSchemaMessage(m) || {
+        val keep = keepSchemas || !sentSchema
+        sentSchema = true
+        keep
+      }
+    }
+  }
+
   /** Regroup a flat FlightData-message sequence into self-contained
     * per-partition IPC streams: each Schema header starts a new stream
     * (Flight's stream framing — the schema message leads every stream). */

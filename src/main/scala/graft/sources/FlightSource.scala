@@ -4,15 +4,16 @@ import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
-import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.ipc.ArrowStreamReader
+import scala.jdk.CollectionConverters._
+
+import org.apache.arrow.vector.types.pojo.Schema
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** DataSource V2 reader over a LIVE Arrow Flight gRPC endpoint — the
   * consumer half of the reference's data plane as a first-class Spark
@@ -208,82 +209,45 @@ final class FlightScan(schema: StructType, host: String, port: Int,
 final case class FlightEndpointPartition(ticket: Array[Byte])
     extends InputPartition
 
+/** One task's endpoint drain: its own gRPC connection, one DoGet, the
+  * reassembled IPC stream served batch by batch. Columns are projected
+  * BY NAME: a server that ignored (or never saw) the ticket's cols=
+  * suffix ships its full column set, so the reader selects what the scan
+  * needs and verifies the types instead of requiring schema identity. */
 final class FlightReaderFactory(schema: StructType, host: String,
                                 port: Int, token: String)
     extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    true
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[ColumnarBatch] = {
+    val ticket = partition.asInstanceOf[FlightEndpointPartition].ticket
+    val cli = new FlightGrpc.Client(host, port, token)
+    val blob =
+      try {
+        val msgs = cli.callOk("DoGet",
+            Seq(FlightProto.Ticket(ticket).encode))
+          .map(FlightProto.FlightData.decode)
+          .map(fd => FlightProto.IpcMessage(fd.dataHeader, fd.dataBody))
+        require(msgs.nonEmpty,
+          s"empty DoGet stream for ticket ${new String(ticket, UTF_8)}")
+        // one endpoint = one partition = one self-contained IPC stream
+        FlightProto.joinIpcStream(msgs)
+      } finally cli.close()
+    new ArrowIpc.BatchReader(new ByteArrayInputStream(blob), { root =>
+      val vs = schema.fields.toSeq.map { f =>
+        Option(root.getVector(f.name)).getOrElse(
+          throw new IllegalArgumentException(
+            s"column ${f.name} missing from flight stream ${root.getSchema}"))
+      }
+      require(ArrowIpcSource.sparkSchema(new Schema(
+          vs.map(_.getField).asJava)) == schema,
+        s"flight stream schema ${root.getSchema} incompatible with " +
+          s"expected $schema")
+      vs
+    })
+  }
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] =
-    new FlightPartitionReader(schema, host, port, token,
-      partition.asInstanceOf[FlightEndpointPartition].ticket)
-}
-
-/** One task's endpoint drain: its own gRPC connection, one DoGet, rows
-  * streamed batch-by-batch out of the reassembled IPC stream. */
-final class FlightPartitionReader(schema: StructType, host: String,
-                                  port: Int, token: String,
-                                  ticket: Array[Byte])
-    extends PartitionReader[InternalRow] {
-
-  private val blob: Array[Byte] = {
-    val cli = new FlightGrpc.Client(host, port, token)
-    try {
-      val msgs = cli.callOk("DoGet",
-          Seq(FlightProto.Ticket(ticket).encode))
-        .map(FlightProto.FlightData.decode)
-        .map(fd => FlightProto.IpcMessage(fd.dataHeader, fd.dataBody))
-      require(msgs.nonEmpty,
-        s"empty DoGet stream for ticket ${new String(ticket, UTF_8)}")
-      // one endpoint = one partition = one self-contained IPC stream
-      FlightProto.joinIpcStream(msgs)
-    } finally cli.close()
-  }
-
-  private val allocator = new RootAllocator(Long.MaxValue)
-  private val reader =
-    new ArrowStreamReader(new ByteArrayInputStream(blob), allocator)
-  private val root = reader.getVectorSchemaRoot
-  // project BY NAME: a server that ignored (or never saw) the ticket's
-  // cols= suffix ships its full column set — select what the scan
-  // needs and verify the types, instead of requiring schema identity
-  private val vectors = {
-    import scala.jdk.CollectionConverters._
-    val vs = schema.fields.map { f =>
-      Option(root.getVector(f.name)).getOrElse(
-        throw new IllegalArgumentException(
-          s"column ${f.name} missing from flight stream ${root.getSchema}"))
-    }
-    require(ArrowIpcSource.sparkSchema(
-        new org.apache.arrow.vector.types.pojo.Schema(
-          vs.map(_.getField).toSeq.asJava)) == schema,
-      s"flight stream schema ${root.getSchema} incompatible with " +
-        s"expected $schema")
-    vs
-  }
-  private var rowInBatch = 0
-  private var batchRows = 0
-
-  override def next(): Boolean = {
-    if (rowInBatch < batchRows) true
-    else if (reader.loadNextBatch()) {
-      batchRows = root.getRowCount
-      rowInBatch = 0
-      batchRows > 0 || next()
-    } else false
-  }
-
-  override def get(): InternalRow = {
-    val values = new Array[Any](vectors.length)
-    var c = 0
-    while (c < vectors.length) {
-      values(c) = ArrowIpcSource.readCatalyst(vectors(c), rowInBatch)
-      c += 1
-    }
-    rowInBatch += 1
-    new GenericInternalRow(values)
-  }
-
-  override def close(): Unit = {
-    reader.close()
-    allocator.close()
-  }
+    throw new UnsupportedOperationException("Flight scans are columnar")
 }

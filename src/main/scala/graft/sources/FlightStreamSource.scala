@@ -28,7 +28,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - a micro-batch (start, end] plans ONE INPUT PARTITION PER STAGED
   *    FILE across the log range (`flight.log.tickets` action → tickets
   *    `name@seq#i`), so batch parallelism follows producer parallelism;
-  *  - tasks reuse [[FlightPartitionReader]] — each drains its ticket
+  *  - tasks reuse [[FlightReaderFactory]] — each drains its ticket
   *    over its own HTTP/2 connection; the server serves file bytes with
   *    no Spark job, so a reader fleet can never deadlock the server;
   *  - batches are immutable once appended and offsets are durable log

@@ -12,21 +12,32 @@ class ArrowIpcSourceSpec extends AnyFunSuite {
   private val format = classOf[ArrowIpcSource].getName
 
   test("DSv2 source reads back IPC files with schema inference") {
-    val dir = TestSpark.tmpDir("graft_ipc_src").toString
-    val df = Seq(
+    val sample = Seq(
       (1L, "ann", 2.5, Seq(1.0f, 2.0f)),
       (2L, "bob", -0.5, Seq(3.0f)),
       (3L, null.asInstanceOf[String], 0.0, Seq.empty[Float])
-    ).toDF("id", "name", "score", "vec").repartition(2)
-    ArrowIpc.writeIpcFiles(df, dir)
-    val back = spark.read.format(format).load(dir)
-    // source reports everything nullable (Arrow vectors are) — compare
-    // names and base types
-    assert(back.schema.fields.map(f => (f.name, f.dataType.typeName)).toSeq ==
-      df.schema.fields.map(f => (f.name, f.dataType.typeName)).toSeq)
-    assert(back.rdd.getNumPartitions == 2)   // one partition per file
-    assert(back.orderBy("id").collect().toSeq ==
-      df.orderBy("id").collect().toSeq)
+    ).toDF("id", "name", "score", "vec")
+    // the second input carries null list elements, null and empty lists
+    for (input <- Seq(sample, ArrowIpcSpec.nullElements(spark))) {
+      val dir = TestSpark.tmpDir("graft_ipc_src").toString
+      val df = input.repartition(2)
+      ArrowIpc.writeIpcFiles(df, dir)
+      val back = spark.read.format(format).load(dir)
+      // source reports everything nullable (Arrow vectors are) — compare
+      // names and base types
+      assert(back.schema.fields.map(f => (f.name, f.dataType.typeName)).toSeq ==
+        df.schema.fields.map(f => (f.name, f.dataType.typeName)).toSeq)
+      assert(back.rdd.getNumPartitions == 2)   // one partition per file
+      ArrowIpcSpec.assertSameRows(back, df)
+    }
+  }
+
+  test("null list elements, null lists and empty lists round-trip " +
+      "through a DSv2 write and read") {
+    val df = ArrowIpcSpec.nullElements(spark)
+    val dir = TestSpark.tmpDir("graft_ipc_nulls").toString
+    df.write.format(format).mode("overwrite").save(dir)
+    ArrowIpcSpec.assertSameRows(spark.read.format(format).load(dir), df)
   }
 
   test("source composes with SQL: filter + aggregate over the DSv2 scan") {

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ArrowIpc
@@ -17,13 +18,14 @@ class ArrowIpcSpec extends AnyFunSuite {
   ).toDF("id", "name", "score", "vec")
 
   test("round-trip: DataFrame -> per-partition IPC streams -> DataFrame") {
-    val df = sample.repartition(2)
-    val blobs = ArrowIpc.toIpcStreams(df)
-    assert(blobs.count() == 2)           // one stream per non-empty partition
-    val back = ArrowIpc.fromIpcStreams(blobs, df.schema)
-    val got = back.orderBy("id").collect().toSeq
-    val want = df.orderBy("id").collect().toSeq
-    assert(got == want)
+    // the second input carries null list elements, null and empty lists
+    for (input <- Seq(sample, ArrowIpcSpec.nullElements(spark))) {
+      val df = input.repartition(2)
+      val blobs = ArrowIpc.toIpcStreams(df)
+      assert(blobs.count() == 2)         // one stream per non-empty partition
+      ArrowIpcSpec.assertSameRows(ArrowIpc.fromIpcStreams(blobs, df.schema),
+        df)
+    }
   }
 
   test("batching: rows split into <= batchSize record batches") {
@@ -103,5 +105,32 @@ class ArrowIpcSpec extends AnyFunSuite {
       ArrowIpc.toIpcStreams(nodes.coalesce(1)), nodes.schema)
     assert(back.orderBy("ID").collect().toSeq ==
       nodes.orderBy("ID").collect().toSeq)
+  }
+}
+
+object ArrowIpcSpec {
+  import org.scalatest.Assertions._
+
+  /** `array<double>`, `array<bigint>` and `array<string>` columns with
+    * null elements, plus a null list and an empty list, over two
+    * partitions. */
+  def nullElements(spark: SparkSession): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("d", ArrayType(DoubleType)),
+      StructField("l", ArrayType(LongType)),
+      StructField("s", ArrayType(StringType))))
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, Seq(1.0, null, 2.0), Seq(1L, null, 3L), Seq("a", null, "ü")),
+      Row(2L, null, null, null),
+      Row(3L, Seq.empty, Seq.empty, Seq.empty),
+      Row(4L, Seq(null), Seq(null), Seq(null)),
+      Row(5L, Seq(-0.5), Seq(Long.MaxValue), Seq("日本", ""))), 2), schema)
+  }
+
+  /** Equal sorted rows, and `exceptAll` empty both ways. */
+  def assertSameRows(back: DataFrame, df: DataFrame): Unit = {
+    assert(back.orderBy("id").collect().toSeq ==
+      df.orderBy("id").collect().toSeq)
+    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.{ChecksumException, FileSystem, LocalFileSystem, Pat
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.FlightFixture.withFlight
-import graft.sources.{ArrowIpc, FlightProto, FlightService, HadoopFiles}
+import graft.sources.{FlightProto, FlightService, HadoopFiles}
 
 /** The shared Hadoop handle: every Arrow data-plane file operation goes
   * through [[HadoopFiles]], which must stay on the checksummed
@@ -93,16 +93,33 @@ class HadoopFilesSpec extends AnyFunSuite {
 
   test("a spill file with one flipped byte fails the spilled put's " +
       "DSv2 read with a checksum error and registers nothing") {
-    val svc = new FlightService(spark)
-    try {
-      val dir = TestSpark.tmpDir("graft_crc_spill_").toFile
-      ArrowIpc.writeIpcFiles(doubles, dir.getAbsolutePath)
-      flipMiddleByte(new java.io.File(dir, "part-0.arrow"))
-      val e = intercept[Exception](svc.ingestSpilledPut(
-        FlightProto.FlightDescriptor.path("crc_spill"), dir,
-        "id BIGINT, x DOUBLE"))
-      assert(isChecksumError(e), s"not a checksum failure: $e")
-      assert(svc.list().isEmpty)
-    } finally svc.cleanupStaging()
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def spillDirs = tmp.listFiles.toSet
+      .filter(_.getName.startsWith("graft_put_spill_"))
+    withFlight { (srv, c) =>
+      val before = spillDirs
+      // 400k (id, x) rows, ~6.4 MB: past the transport's 4 MiB spill
+      // threshold, so the DoPut lands in a real spill dir
+      assert(c.doPut("crc_spill_src",
+        spark.range(0, 400000, 1, 1)
+          .selectExpr("id", "cast(id as double) * 0.5 as x")) == 400000L)
+      assert(srv.service.spilledPuts.get() == 1)
+      val dir = (spillDirs -- before).toSeq match {
+        case Seq(d) => d
+        case ds => fail(s"expected one new spill dir, got $ds")
+      }
+      val part = new java.io.File(dir, "part-00000.arrows")
+      assert(new java.io.File(dir, s".${part.getName}.crc").isFile,
+        s"the spill file carries no .crc: ${dir.list.toSeq}")
+      flipMiddleByte(part)
+      val svc = new FlightService(spark)
+      try {
+        val e = intercept[Exception](svc.ingestSpilledPut(
+          FlightProto.FlightDescriptor.path("crc_spill"), dir,
+          "id BIGINT, x DOUBLE"))
+        assert(isChecksumError(e), s"not a checksum failure: $e")
+        assert(svc.list().isEmpty)
+      } finally svc.cleanupStaging()
+    }
   }
 }

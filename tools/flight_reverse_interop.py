@@ -14,6 +14,7 @@ Writes INTEROP_REVERSE.json; exits non-zero on failure.
 """
 import json
 import pathlib
+import shutil
 import subprocess
 import sys
 import threading
@@ -123,6 +124,16 @@ def main():
     t.start()
     import tempfile
     tmpdir = tempfile.mkdtemp(prefix="graft_reverse_tls_")
+    try:
+        run_client(server, port, tmpdir)
+    finally:
+        # the stock server's cert, key and truststore
+        shutil.rmtree(tmpdir, ignore_errors=True)
+
+
+def run_client(server, port, tmpdir):
+    """Drive the graft client against both stock servers; exits 0 only
+    when every step passed."""
     cert_pem, key_pem, truststore = make_tls_material(tmpdir)
     tls_server = StockTlsServer(cert_pem, key_pem)
     tls_port = tls_server.port
